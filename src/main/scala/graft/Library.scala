@@ -1343,9 +1343,9 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   /** The persisted postings slice for `terms`: partition-pruned to the
     * query terms' hash buckets, `__tb` dropped so downstream sees the
-    * plain (id, term, tf) shape. */
+    * plain (id, term, tf) shape. The caller has already run
+    * [[migrateLegacyFtsLayout]]. */
   private def prunedPostings(terms: Seq[String]): DataFrame = {
-    migrateLegacyFtsLayout()
     // Locale.ROOT, NOT the default locale: the indexed terms were lowered
     // with Spark's locale-independent lower(); under tr/az 'I'.toLowerCase
     // is 'ı', which hashes to a different bucket and silently drops hits
@@ -1475,7 +1475,7 @@ class Library(val spark: SparkSession, val warehouse: String,
       if (tableExists("fts_postings")) {
         // migrate BEFORE reading stats: a pre-doclen warehouse has no
         // fts_stats table yet, and readFtsStats would throw rather than
-        // upgrade in place (prunedPostings migrates too, but runs later)
+        // upgrade in place
         migrateLegacyFtsLayout()
         // the scale path: stats from the O(#writes) stats table, doclen
         // from the probe slice itself — NO fts_lens scan or join

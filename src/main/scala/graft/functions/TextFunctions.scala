@@ -85,31 +85,6 @@ object TextFunctions {
   def portableHash32(c: Column): Column =
     graft.plans.Md5Hash32(c.cast("string"))
 
-  /** Hash-family names for [[hash32]]: md5 is the oracle mode (portable
-    * across engines, certifiable against a SQL oracle bit-for-bit);
-    * xxh64 is the production mode (~an order of magnitude cheaper per
-    * byte, Spark-side only). Both land in the same unsigned-32-bit-in-a-
-    * long range, so every downstream contract (`% buckets`, band keys,
-    * Efraimidis keys) is family-agnostic. */
-  val HashMd5 = "md5"
-  val HashXxh64 = "xxh64"
-
-  /** Production-speed sibling of [[portableHash32]]: Spark's codegen'd
-    * xxhash64 folded into the same [0, 2^32) range (pmod by a power of
-    * two == the unsigned low-32 mask). NOT cross-engine portable —
-    * certification stays on the md5 family. */
-  def fastHash32(c: Column): Column =
-    pmod(xxhash64(c), lit(1L << 32))
-
-  /** Family dispatch — same interface, same output range, caller picks
-    * certifiability (md5) or throughput (xxh64). */
-  def hash32(c: Column, family: String): Column = family match {
-    case HashXxh64 => fastHash32(c)
-    case HashMd5 => portableHash32(c)
-    case other => throw new IllegalArgumentException(
-      s"unknown hash family '$other' (expected $HashMd5 or $HashXxh64)")
-  }
-
   /** One MinHash value: min over the element-wise portable hash of
     * `seed || element`. */
   def minhash(elems: Column, seed: Int): Column =

@@ -54,10 +54,9 @@ object Dedup {
     * hashing cost, and the shingle array is materialized in its own
     * projection so it is computed once per row, not once per column. */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int, shingleK: Int,
-                       hashFamily: String = graft.functions.TextFunctions.HashMd5): DataFrame = {
+                       numHashes: Int, shingleK: Int): DataFrame = {
     val sig = graft.plans.MinHashSignature(lower(col(textCol)), shingleK,
-      numHashes, hashFamily)
+      numHashes)
     val mhCols = (0 until numHashes).map(i =>
       element_at(col("__sig"), i + 1).as(s"mh$i"))
     df.select(col(idCol).as("id"), sig.as("__sig"))
@@ -134,17 +133,14 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** End-to-end MinHash LSH near-dup detection. `hashFamily` switches
-    * the signature hashes between the md5 oracle mode and the xxh64
-    * production mode (see [[graft.functions.TextFunctions.hash32]]) —
-    * the final verdict filter is exact Jaccard either way, so the
-    * family only steers candidate recall, not pair truth. */
+  /** End-to-end MinHash LSH near-dup detection: md5 signatures band
+    * into candidates, and the final verdict filter is exact Jaccard, so
+    * the hash only steers candidate recall, not pair truth. */
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 8, numBands: Int = 4,
                       shingleK: Int = 5, threshold: Double = 0.5,
-                      maxBucketSize: Int = 1000,
-                      hashFamily: String = graft.functions.TextFunctions.HashMd5): DataFrame = {
-    val sig = minhashSignature(df, idCol, textCol, numHashes, shingleK, hashFamily)
+                      maxBucketSize: Int = 1000): DataFrame = {
+    val sig = minhashSignature(df, idCol, textCol, numHashes, shingleK)
     val cands = lshCandidatePairs(sig, numHashes, numBands, maxBucketSize)
     verifyPairs(df, idCol, textCol, cands, shingleK, threshold)
   }
@@ -429,12 +425,9 @@ object Dedup {
     *
     * Output: (id, pos, fp) — 1-based gram position, unsigned-32 hash. */
   def winnowedFingerprints(df: DataFrame, idCol: String, textCol: String,
-                           k: Int = 5, w: Int = 4,
-                           hashFamily: String = graft.functions.TextFunctions.HashMd5)
-      : DataFrame =
+                           k: Int = 5, w: Int = 4): DataFrame =
     df.select(col(idCol).as("id"),
-        explode(graft.plans.WinnowedSelect(lower(col(textCol)), k, w,
-          hashFamily)).as("s"))
+        explode(graft.plans.WinnowedSelect(lower(col(textCol)), k, w)).as("s"))
       .select(col("id"), col("s.p").as("pos"), col("s.v").as("fp"))
 
   /** Near-duplicate pairs by shared winnowed fingerprints — the
@@ -458,10 +451,8 @@ object Dedup {
     * hot boilerplate was excluded — and by how much. */
   def winnowingDupPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 5, w: Int = 4, minShared: Long = 2L,
-                        maxDocFreq: Long = 64L,
-                        hashFamily: String = graft.functions.TextFunctions.HashMd5)
-      : DataFrame = {
-    val fps = winnowedFingerprints(df, idCol, textCol, k, w, hashFamily)
+                        maxDocFreq: Long = 64L): DataFrame = {
+    val fps = winnowedFingerprints(df, idCol, textCol, k, w)
       .select(col("id"), col("fp")).distinct()
       .materializeOnce(eager = false) // sizes + both join sides
     val sizes = fps.groupBy("id").agg(count(lit(1)).as("n_fp"))

@@ -22,17 +22,15 @@ import org.apache.spark.sql.functions._
   * `sum_grams log10(p_target[bucket] / p_source[bucket])` with Laplace
   * smoothing over the bucket space.
   *
-  * Scale design: document text never shuffles — the explode emits
-  * (id, bucket-int) pairs that partial-aggregate map-side before the
-  * one keyed shuffle; the bucket statistics table is at most `buckets`
-  * rows and BROADCASTS back into the per-doc scoring join; totals ride
-  * a broadcast cross join of a single aggregate row. Hashing defaults to
+  * Scale design: document text never shuffles — each doc's hashed
+  * feature histogram is one map-only expression, the bucket statistics
+  * are one slim (bucket, count) shuffle collapsed to a driver-side
+  * array of at most `buckets` ratios, and scoring folds each histogram
+  * against that array map-only (see [[dsirWeightsNative]]). Hashing is
   * the portable md5-derived [[portableHash32]], so weights are
   * reproducible cross-engine and cross-run bit-for-bit (up to the
   * documented <=1-ulp log10 gap, absorbed by 6dp rounding at output
-  * boundaries); production runs can pass `hashFamily = "xxh64"` for a
-  * codegen'd hash at identical plan shape — any consistent hash is a
-  * valid DSIR bucketing, only oracle certifiability is lost.
+  * boundaries).
   */
 object ImportanceSampling {
 
@@ -66,20 +64,16 @@ object ImportanceSampling {
     * legacy column path's groupBy(id) incidentally merged duplicate
     * ids, an implementation artifact, not promised semantics. */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
-                  isTarget: Column, buckets: Int = 4096,
-                  hashFamily: String = graft.functions.TextFunctions.HashMd5): DataFrame = {
+                  isTarget: Column, buckets: Int = 4096): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    if (hashFamily == graft.functions.TextFunctions.HashMd5)
-      dsirWeightsNative(df, idCol, textCol, isTarget, buckets)
-    else dsirWeightsColumns(df, idCol, textCol, isTarget, buckets, hashFamily)
+    dsirWeightsNative(df, idCol, textCol, isTarget, buckets)
   }
 
-  /** The pre-round-20 column formulation — the path for hash families
-    * without a native kernel, and the parity reference the spec pins
-    * the map-only form against. */
+  /** The pre-round-20 explode → shuffle → broadcast-join formulation —
+    * the bit-identity reference the spec pins [[dsirWeights]] against. */
   private[operators] def dsirWeightsColumns(
       df: DataFrame, idCol: String, textCol: String, isTarget: Column,
-      buckets: Int, hashFamily: String): DataFrame = {
+      buckets: Int): DataFrame = {
     val base = df.select(col(idCol).as("id"),
       coalesce(isTarget.cast("int"), lit(0)).as("is_target"),
       grams(lower(col(textCol))).as("__gs"))
@@ -87,8 +81,7 @@ object ImportanceSampling {
     val perDoc = base
       .select(col("id"), col("is_target"),
         explode(col("__gs")).as("g"))
-      .withColumn("__b",
-        graft.functions.TextFunctions.hash32(col("g"), hashFamily) % buckets)
+      .withColumn("__b", portableHash32(col("g")) % buckets)
       .groupBy("id", "is_target", "__b")
       .agg(count(lit(1)).as("n"))
       .materializeOnce(eager = false) // two consumers: stats + scoring
@@ -117,7 +110,7 @@ object ImportanceSampling {
         coalesce(col("weight"), lit(0.0)).as("weight"))
   }
 
-  /** Round-20 md5-family path (guide §2.3/§2.4): the per-doc feature
+  /** Round-20 native path (guide §2.3/§2.4): the per-doc feature
     * histogram is ONE map-only expression
     * ([[graft.plans.HashedGramBuckets]] — no gram-string explode, no
     * hex round-trip, hashing paid once behind a checkpoint), the bucket

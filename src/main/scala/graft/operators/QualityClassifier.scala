@@ -24,25 +24,25 @@ import org.apache.spark.sql.functions._
   * (map-side combined) and assembles one bounded sparse vector per doc
   * (`buckets` is the dimension — thousands, not vocabulary-sized);
   * L-BFGS iterations are treeAggregate passes over those vectors.
-  * Scoring never materializes vectors: the `buckets`-row weight table
-  * broadcasts into the count join, and the per-doc dot product is a
-  * deterministic bucket-ordered fold — bit-reproducible across
+  * Scoring never materializes vectors: one map-only expression folds
+  * each doc's hashed grams against the weight array in bucket order —
+  * a deterministic fold, bit-reproducible across
   * partitionings and engines (no float-sum shuffle-order freedom).
   */
 object QualityClassifier {
 
   /** Fitted model: plain data, replayable as SQL literals. */
   case class LrQualityModel(buckets: Int, intercept: Double,
-                            weights: Array[Double], hashFamily: String)
+                            weights: Array[Double])
 
   /** Hashed (bucket, count) rows per doc — DSIR's feature stream. */
   private def bucketCounts(df: DataFrame, idCol: String, textCol: String,
-                           buckets: Int, hashFamily: String): DataFrame = {
+                           buckets: Int): DataFrame = {
     val t = TextFunctions.tokens(lower(col(textCol)))
     val bi = transform(TextFunctions.bigramPairs(t),
       p => concat(p.getField("prev"), lit(" "), p.getField("cur")))
     df.select(col(idCol).as("id"), explode(concat(t, bi)).as("g"))
-      .withColumn("__b", TextFunctions.hash32(col("g"), hashFamily) % buckets)
+      .withColumn("__b", TextFunctions.portableHash32(col("g")) % buckets)
       .groupBy("id", "__b")
       .agg(count(lit(1)).as("n"))
   }
@@ -55,12 +55,12 @@ object QualityClassifier {
     * `standardization = false` so weights live in raw count space and
     * the SQL replay needs no mean/variance literals. */
   def train(df: DataFrame, idCol: String, textCol: String, isTarget: Column,
-            buckets: Int = 1024, regParam: Double = 0.1, maxIter: Int = 100,
-            hashFamily: String = TextFunctions.HashMd5): LrQualityModel = {
+            buckets: Int = 1024, regParam: Double = 0.1,
+            maxIter: Int = 100): LrQualityModel = {
     require(buckets > 0, "buckets must be positive")
     val labeled = df.select(col(idCol).as("id"),
       coalesce(isTarget.cast("int"), lit(0)).cast("double").as("__l"))
-    val feats = bucketCounts(df, idCol, textCol, buckets, hashFamily)
+    val feats = bucketCounts(df, idCol, textCol, buckets)
       .groupBy("id")
       .agg(collect_list(struct(col("__b").cast("int").as("b"),
         col("n").cast("double").as("c"))).as("__feats"))
@@ -76,8 +76,7 @@ object QualityClassifier {
       .setStandardization(false)
       .setFeaturesCol("__f").setLabelCol("__l")
       .fit(trainSet)
-    LrQualityModel(buckets, fitted.intercept,
-      fitted.coefficients.toArray, hashFamily)
+    LrQualityModel(buckets, fitted.intercept, fitted.coefficients.toArray)
   }
 
   /** Score every doc: z = intercept + Σ_b count_b · w_b,
@@ -107,9 +106,7 @@ object QualityClassifier {
     * no join-back. The dot is the same ascending-bucket IEEE fold as
     * the previous explode → groupBy → array_sort formulation
     * (bit-identity pinned in QualityClassifierSpec), so every z/score
-    * and the frozen oracle are unchanged. The non-portable xxh64
-    * family keeps the column formulation (its per-gram hash is already
-    * codegen'd; only md5 paid the hex-string round-trip).
+    * and the frozen oracle are unchanged.
     *
     * Contract (ADVICE r20): each input ROW scores independently —
     * `idCol` is expected unique (the library-wide doc_id contract;
@@ -119,21 +116,19 @@ object QualityClassifier {
     *
     * Output: (id, n_grams, z, score). */
   def scoreWithMargin(df: DataFrame, idCol: String, textCol: String,
-                      model: LrQualityModel): DataFrame =
-    if (model.hashFamily == TextFunctions.HashMd5) {
-      require(model.weights.length == model.buckets,
-        s"weights length ${model.weights.length} != buckets ${model.buckets}")
-      val d = graft.plans.HashedGramDot(lower(col(textCol)), model.weights)
-      df.select(col(idCol).as("id"), d.as("__d"))
-        .select(col("id"),
-          coalesce(col("__d.n_grams"), lit(0L)).as("n_grams"),
-          (lit(model.intercept) + coalesce(col("__d.dot"), lit(0.0))).as("z"))
-        .withColumn("score", lit(1.0) / (lit(1.0) + exp(-col("z"))))
-    } else scoreWithMarginColumns(df, idCol, textCol, model)
+                      model: LrQualityModel): DataFrame = {
+    require(model.weights.length == model.buckets,
+      s"weights length ${model.weights.length} != buckets ${model.buckets}")
+    val d = graft.plans.HashedGramDot(lower(col(textCol)), model.weights)
+    df.select(col(idCol).as("id"), d.as("__d"))
+      .select(col("id"),
+        coalesce(col("__d.n_grams"), lit(0L)).as("n_grams"),
+        (lit(model.intercept) + coalesce(col("__d.dot"), lit(0.0))).as("z"))
+      .withColumn("score", lit(1.0) / (lit(1.0) + exp(-col("z"))))
+  }
 
-  /** The pre-round-20 column formulation — the path for hash families
-    * without a native kernel, and the bit-identity reference the spec
-    * pins the map-only form against. */
+  /** The pre-round-20 explode → groupBy → array_sort formulation — the
+    * bit-identity reference the spec pins [[scoreWithMargin]] against. */
   private[operators] def scoreWithMarginColumns(
       df: DataFrame, idCol: String, textCol: String,
       model: LrQualityModel): DataFrame = {
@@ -141,8 +136,7 @@ object QualityClassifier {
     val wdf = broadcast(spark.createDataFrame(
       model.weights.zipWithIndex.map { case (w, b) => (b.toLong, w) }.toSeq)
       .toDF("__b", "__w"))
-    val perDoc = bucketCounts(df, idCol, textCol, model.buckets,
-      model.hashFamily)
+    val perDoc = bucketCounts(df, idCol, textCol, model.buckets)
       .join(wdf, Seq("__b"))
       .groupBy("id")
       .agg(sum("n").as("n_grams"),

@@ -295,11 +295,8 @@ object TextAnalysis {
     *     to an OVERLAPPING gram's non-canonical window; coverage stays
     *     the deterministic union of non-exempt windows.
     *
-    * `hashFamily`: md5 keys grams with the full 128-bit hex digest
-    * (cross-engine portable, collision-free in practice — the oracle
-    * mode); xxh64 uses Spark's codegen'd 64-bit xxhash64 (cheapest;
-    * ~n²/2⁶⁵ expected false spans at corpus scale, each costing one
-    * k-token window, not a document).
+    * Grams are keyed by their full 128-bit md5 hex digest: cross-engine
+    * portable and collision-free in practice, so the oracle replays it.
     *
     * Output: id, n_tokens, n_dup_tokens, n_dup_spans, dup_frac,
     * cleaned_text. Token-sequence semantics: cleaned_text is the kept
@@ -308,11 +305,10 @@ object TextAnalysis {
   def substringDedup(df: DataFrame, idCol: String, textCol: String,
                      k: Int, minCount: Long = 2L,
                      broadcastHot: Boolean = true,
-                     hashFamily: String = HashMd5,
                      keepFirst: Boolean = false): DataFrame =
     dedupUnitWindows(
       df.select(col(idCol).as("id"), tokens(lower(col(textCol))).as("t")),
-      k, minCount, broadcastHot, hashFamily, keepFirst,
+      k, minCount, broadcastHot, keepFirst,
       keySep = " ", outSep = " ")
 
   /** Duplicate-span removal over caller-defined UNITS — C4's
@@ -333,11 +329,10 @@ object TextAnalysis {
   def spanDedup(df: DataFrame, idCol: String, unitsOf: Column,
                 k: Int, minCount: Long = 2L,
                 broadcastHot: Boolean = true,
-                hashFamily: String = HashMd5,
                 keepFirst: Boolean = false,
                 sep: String = " "): DataFrame =
     dedupUnitWindows(df.select(col(idCol).as("id"), unitsOf.as("t")),
-      k, minCount, broadcastHot, hashFamily, keepFirst,
+      k, minCount, broadcastHot, keepFirst,
       keySep = "\u0001", outSep = sep)
       .withColumnRenamed("n_tokens", "n_units")
       .withColumnRenamed("n_dup_tokens", "n_dup_units")
@@ -347,23 +342,16 @@ object TextAnalysis {
     * the corpus-wide hot set (joined by `keySep`), kept units emit
     * joined by `outSep`. */
   private def dedupUnitWindows(base: DataFrame, k: Int, minCount: Long,
-                               broadcastHot: Boolean, hashFamily: String,
-                               keepFirst: Boolean,
+                               broadcastHot: Boolean, keepFirst: Boolean,
                                keySep: String, outSep: String): DataFrame = {
     require(k >= 2, s"substring/span dedup needs k >= 2, got $k")
-    def gramKey(c: Column): Column = hashFamily match {
-      case HashMd5 => md5(c)
-      case HashXxh64 => xxhash64(c).cast("string")
-      case other => throw new IllegalArgumentException(
-        s"unknown hash family '$other' (expected $HashMd5 or $HashXxh64)")
-    }
     val kL = lit(k.toLong)
     // 1-based gram start positions, mirroring SQL list slicing
     val flat = base
       .select(col("id"), posexplode(
         when(size(col("t")) >= k,
           transform(sequence(lit(1), size(col("t")) - (k - 1)),
-            i => gramKey(concat_ws(keySep, slice(col("t"), i, lit(k))))))
+            i => md5(concat_ws(keySep, slice(col("t"), i, lit(k))))))
         .otherwise(array().cast("array<string>"))).as(Seq("p0", "h")))
       .select(col("id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
     val hot = flat.groupBy("h").agg(count(lit(1)).as("c"),

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -23,36 +23,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback is fine here: the loop body is the expensive part and
   * it is already a tight JVM loop; splitting whole-stage codegen around
   * it costs one virtual call per ROW, not per shingle.
-  *
-  * `hashFamily` picks the per-shingle hash pair: "md5" (default) is the
-  * cross-engine-portable oracle mode above; "xxh64" derives h1/h2 from
-  * two seeds of the xxHash64 the JVM already ships for Spark's own
-  * hash exprs — same Kirsch-Mitzenmacher fold, same [0, 2^32) range,
-  * same plan shape, an order of magnitude less per-byte work. Candidate
-  * RECALL is where the family lands; the verify join re-checks exact
-  * Jaccard either way, so verdicts at threshold are hash-agnostic for
-  * any pair the bands catch.
   */
-case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int,
-                            hashFamily: String = "md5")
+case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  // validate like TextFunctions.hash32: a typo ("xxhash64", "XXH64")
-  // must fail loudly, not silently fall back to the 10x-slower md5 path
-  private val useXxh = hashFamily match {
-    case "xxh64" => true
-    case "md5" => false
-    case other => throw new IllegalArgumentException(
-      s"unknown hashFamily '$other' (supported: md5, xxh64)")
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val text = input.asInstanceOf[UTF8String].toString
     val mins = Array.fill(numHashes)(Long.MaxValue)
-    val md =
-      if (useXxh) null else java.security.MessageDigest.getInstance("MD5")
+    val md = java.security.MessageDigest.getInstance("MD5")
     val prefix = "x|".getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // shingle by Unicode CODE POINTS, not UTF-16 code units: Spark's
     // substr/length and DuckDB count code points, and splitting a
@@ -65,18 +45,11 @@ case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int,
       val shingle =
         if (n >= shingleK) new String(cps, i, shingleK) else text
       val bytes = shingle.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var h1 = 0L
-      var h2 = 0L
-      if (useXxh) {
-        h1 = XxHash64Function.hash(bytes, org.apache.spark.sql.types.BinaryType, 42L) & 0xffffffffL
-        h2 = XxHash64Function.hash(bytes, org.apache.spark.sql.types.BinaryType, 4243L) & 0xffffffffL
-      } else {
-        md.reset()
-        h1 = firstFourUnsigned(md.digest(bytes))
-        md.reset()
-        md.update(prefix)
-        h2 = firstFourUnsigned(md.digest(bytes))
-      }
+      md.reset()
+      val h1 = firstFourUnsigned(md.digest(bytes))
+      md.reset()
+      md.update(prefix)
+      val h2 = firstFourUnsigned(md.digest(bytes))
       var j = 0
       while (j < numHashes) {
         val h = (h1 + j * h2) & 0xffffffffL
@@ -98,10 +71,6 @@ case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int,
 
 object MinHashSignature {
   def apply(text: Column, shingleK: Int, numHashes: Int): Column =
-    apply(text, shingleK, numHashes, "md5")
-
-  def apply(text: Column, shingleK: Int, numHashes: Int,
-            hashFamily: String): Column =
     GraftBridge.column(MinHashSignature(
-      GraftBridge.expression(text), shingleK, numHashes, hashFamily))
+      GraftBridge.expression(text), shingleK, numHashes))
 }

@@ -2,10 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Robust winnowing (Schleimer, Wilkerson & Aiken 2003) as a single-pass
@@ -18,11 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * is non-decreasing as the window slides, so de-dup is a single
   * last-emitted check — the output is already distinct).
   *
-  * Hash parity: "md5" hashes the gram's UTF-8 bytes and takes the first
-  * four digest bytes unsigned — exactly `TextFunctions.portableHash32`
-  * of the gram, so the DuckDB oracle replays it; "xxh64" is the
-  * production family ([[MinHashSignature]] discipline). Grams are cut
-  * by Unicode code points, matching Spark's `substr` and DuckDB's.
+  * Hash parity: each gram's UTF-8 bytes are md5-hashed and the first
+  * four digest bytes taken unsigned — exactly `TextFunctions.portableHash32`
+  * of the gram, so the DuckDB oracle replays it. Grams are cut by
+  * Unicode code points, matching Spark's `substr` and DuckDB's.
   *
   * CodegenFallback for the same reason as [[MinHashSignature]]: the
   * tight JVM loop is the work; the fallback costs one virtual call per
@@ -33,8 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * has fewer than k code points; one window over everything when
   * m < w.
   */
-case class WinnowedSelect(child: Expression, k: Int, w: Int,
-                          hashFamily: String = "md5")
+case class WinnowedSelect(child: Expression, k: Int, w: Int)
     extends UnaryExpression with CodegenFallback {
   require(k >= 2, s"winnowing needs k >= 2, got $k")
   require(w >= 1, s"winnowing needs w >= 1, got $w")
@@ -43,13 +41,6 @@ case class WinnowedSelect(child: Expression, k: Int, w: Int,
     StructType(Seq(StructField("p", LongType, nullable = false),
       StructField("v", LongType, nullable = false))), containsNull = false)
 
-  private val useXxh = hashFamily match {
-    case "xxh64" => true
-    case "md5" => false
-    case other => throw new IllegalArgumentException(
-      s"unknown hashFamily '$other' (supported: md5, xxh64)")
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val text = input.asInstanceOf[UTF8String].toString
     val cps = text.codePoints().toArray
@@ -57,20 +48,15 @@ case class WinnowedSelect(child: Expression, k: Int, w: Int,
     if (n < k) return new GenericArrayData(Array.empty[Any])
     val m = n - (k - 1)
     val h = new Array[Long](m + 1) // 1-based positions
-    val md =
-      if (useXxh) null else java.security.MessageDigest.getInstance("MD5")
+    val md = java.security.MessageDigest.getInstance("MD5")
     var i = 1
     while (i <= m) {
       val bytes = new String(cps, i - 1, k)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (useXxh) {
-        h(i) = XxHash64Function.hash(bytes, BinaryType, 42L) & 0xffffffffL
-      } else {
-        md.reset()
-        val d = md.digest(bytes)
-        h(i) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-      }
+      md.reset()
+      val d = md.digest(bytes)
+      h(i) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
       i += 1
     }
     val ww = math.min(w, m)
@@ -106,7 +92,6 @@ case class WinnowedSelect(child: Expression, k: Int, w: Int,
 }
 
 object WinnowedSelect {
-  def apply(text: Column, k: Int, w: Int, hashFamily: String): Column =
-    GraftBridge.column(WinnowedSelect(
-      GraftBridge.expression(text), k, w, hashFamily))
+  def apply(text: Column, k: Int, w: Int): Column =
+    GraftBridge.column(WinnowedSelect(GraftBridge.expression(text), k, w))
 }

@@ -653,10 +653,9 @@ object CurationQueries {
     // by any corpus-duplicated 8-gram, merged into maximal spans, and
     // the text with every duplicated span removed. The oracle replays
     // the interval merge as gaps-and-islands windows; the Spark side
-    // has NO Window — one groupBy(id) + an aggregate-HOF fold. md5
-    // gram keys are the cross-engine certification mode (q23/q71
-    // precedent); xxh64 is the production family (HashFamilySpec +
-    // SubstringDedupSpec pin verdict equality)
+    // has NO Window — one groupBy(id) + an aggregate-HOF fold. Gram
+    // keys are md5 hex digests, which both engines compute (q23/q71
+    // precedent)
     Q("q82_substring_dedup", Some(s"""
       WITH base AS (
         SELECT doc_id, ${toksSql("text")} AS t FROM documents),

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * Claims measured (SCALE.md "substringDedup at k=50"):
   *   - hot-set size vs k (the broadcast-side object — the scale risk)
-  *   - wall time vs k for both hash families (md5 oracle mode vs xxh64
-  *     production mode; k× fewer bytes hashed per window under xxh64)
+  *   - wall time vs k
   */
 object SubstrScaleBench {
   def main(args: Array[String]): Unit = {
@@ -59,18 +58,18 @@ object SubstrScaleBench {
       avg(size(split(col("text"), " "))).as("toks")).head()
     println(s"corpus: ${stats.getLong(0)} docs, avg ${stats.getDouble(1)}%.1f tokens")
 
-    for (k <- Seq(8, 25, 50); family <- Seq(TextFunctions.HashMd5, TextFunctions.HashXxh64)) {
+    for (k <- Seq(8, 25, 50)) {
       val t0 = System.nanoTime()
       val out = TextAnalysis.substringDedup(corpus, "doc_id", "text", k,
-        minCount = 2L, hashFamily = family)
+        minCount = 2L)
       val agg = out.agg(count(lit(1)), sum("n_dup_tokens"),
         sum(when(col("n_dup_tokens") > 0, 1).otherwise(0))).head()
       val el = (System.nanoTime() - t0) / 1e9
       graft.util.Materialize.releaseAll(spark)
-      println(f"k=$k%-3d family=$family%-6s  ${el}%6.1f s  " +
+      println(f"k=$k%-3d  ${el}%6.1f s  " +
         f"docs=${agg.getLong(0)}  dupTokens=${agg.getLong(1)}  docsWithDup=${agg.getLong(2)}")
     }
-    // hot-set size (broadcast object) per k, md5 family
+    // hot-set size (broadcast object) per k
     for (k <- Seq(8, 25, 50)) {
       val toks = corpus.select(col("doc_id"),
         TextFunctions.tokens(lower(col("text"))).as("t"))

@@ -3,7 +3,6 @@ package graft
 import graft.model.SearchOptions
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Executable form of the TableSwap recoverability promise: every
   * mid-swap crash state a maintenance path can leave behind is
@@ -15,7 +14,7 @@ class CrashRecoverySpec extends SparkSpec {
   import spark.implicits._
 
   private def freshLib(prefix: String, docs: Int = 12): Library = {
-    val wh = Files.createTempDirectory(prefix).toString
+    val wh = tempDir(prefix).toString
     val l = new Library(spark, wh)
     l.addMarkdown((1 to docs).map(i => (s"/$prefix/doc$i.md",
       s"# Doc$i\n" + (s"$prefix corpus doc number $i searchable words. " * 8))).toDS())

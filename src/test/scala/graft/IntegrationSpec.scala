@@ -2,7 +2,6 @@ package graft
 
 import graft.model.SearchOptions
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Capstone integration: the real testdata corpus flows through the
   * whole facade — ingest, persisted FTS index with incremental
@@ -12,7 +11,7 @@ class IntegrationSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val lib = {
-    val wh = Files.createTempDirectory("graft-int").toString
+    val wh = tempDir("graft-int").toString
     val l = new Library(spark, wh)
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
       .limit(120)
@@ -104,7 +103,7 @@ class IntegrationSpec extends SparkSpec {
   }
 
   test("IVF delta auto-compaction folds an outgrown delta to zero on ingest") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val wh = tempDir("graft-compact").toString
     // floor of 1 row: at this corpus size the fraction gate decides
     val l = new Library(spark, wh, ivfCompactMinRows = 1L)
     l.addMarkdown((1 to 12).map(i => (s"/c/base$i.md",
@@ -127,7 +126,7 @@ class IntegrationSpec extends SparkSpec {
   }
 
   test("delete on an indexed warehouse is cell-scoped: index survives and stays exact") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-del").toString
+    val wh = tempDir("graft-del").toString
     val l = new Library(spark, wh)
     l.addMarkdown((1 to 15).map(i => (s"/d/doc$i.md",
       s"# Doc$i\n" + (s"retrieval corpus doc number $i hash join words. " * 8))).toDS())
@@ -171,7 +170,7 @@ class IntegrationSpec extends SparkSpec {
     val before = run(lib)
     assert(before.nonEmpty)
 
-    val dest = Files.createTempDirectory("graft-export").toString
+    val dest = tempDir("graft-export").toString
     lib.exportTo(dest)
     // fts_stats travels with the export: the first search on the import
     // must score with live N/avgdl, not rebuild or migrate in place
@@ -188,7 +187,7 @@ class IntegrationSpec extends SparkSpec {
     // with EVERY maintained artifact enabled, maintained by a
     // post-enable ingest, exported, and restored — the restore must
     // serve identically through every tier
-    val wh = Files.createTempDirectory("graft-full-exp").toString
+    val wh = tempDir("graft-full-exp").toString
     val l = new Library(spark, wh)
     val salt = wh.split('/').last.takeRight(8)
     l.addMarkdown((1 to 16).map(i => (s"/fx/doc$i.md",
@@ -204,7 +203,7 @@ class IntegrationSpec extends SparkSpec {
     l.addMarkdown((1 to 4).map(i => (s"/fx/new$i.md",
       s"# New$i $salt\n" + (s"novel maintained payload $i $salt tokens. " * 8)))
       .toDS())
-    val dest = Files.createTempDirectory("graft-full-exp2").toString
+    val dest = tempDir("graft-full-exp2").toString
     l.exportTo(dest)
     val r = new Library(spark, dest)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -261,7 +260,7 @@ class IntegrationSpec extends SparkSpec {
 
   test("bulk index delete issues a constant number of Spark jobs regardless of cell count") {
     def jobsForDelete(nVictims: Int): Int = {
-      val wh = Files.createTempDirectory("graft-bulkdel").toString
+      val wh = tempDir("graft-bulkdel").toString
       val l = new Library(spark, wh)
       l.addMarkdown((1 to 24).map(i => (s"/j/doc$i.md",
         s"# Doc$i\n" + (s"job count corpus doc number $i assorted words. " * 8))).toDS())
@@ -295,7 +294,7 @@ class IntegrationSpec extends SparkSpec {
   }
 
   test("threshold compaction FOLDS the delta onto existing centroids and stays exact") {
-    val wh = Files.createTempDirectory("graft-fold").toString
+    val wh = tempDir("graft-fold").toString
     val l = new Library(spark, wh, ivfCompactMinRows = 1L)
     l.addMarkdown((1 to 12).map(i => (s"/f/base$i.md",
       s"# Base$i\n" + (s"fold corpus baseline doc number $i with words. " * 8))).toDS())
@@ -329,7 +328,7 @@ class IntegrationSpec extends SparkSpec {
   }
 
   test("compaction past the refit factor re-fits the quantizer in full") {
-    val wh = Files.createTempDirectory("graft-refit").toString
+    val wh = tempDir("graft-refit").toString
     // refit factor 1.2: a 33% growth burst must trigger a full refit
     val l = new Library(spark, wh, ivfCompactMinRows = 1L, ivfRefitFactor = 1.2)
     l.addMarkdown((1 to 12).map(i => (s"/r/base$i.md",

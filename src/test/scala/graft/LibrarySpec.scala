@@ -11,7 +11,7 @@ class LibrarySpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val lib = {
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val wh = tempDir("graft-wh").toString
     val l = new Library(spark, wh)
     val docA = "---\ntitle: Spark Joins\ntags: [spark, sql]\n---\n# Joins\n" +
       ("Spark supports hash join and sort merge join strategies for large tables. " * 10) +
@@ -76,7 +76,7 @@ class LibrarySpec extends SparkSpec {
     // two short paragraphs pack into ONE chunk joined by \n\n; a
     // single-space tokenizer would glue "okay.\n\nSecond" into one
     // unmatchable term, hiding every paragraph-initial word
-    val wh = Files.createTempDirectory("graft-nl").toString
+    val wh = tempDir("graft-nl").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(("/nl.md",
       "Kumquat zested flavors appear here nicely okay.\n\n" +
@@ -88,7 +88,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("tag-filtered fts ranks within the tagged set, not after a global cut") {
-    val wh = Files.createTempDirectory("graft-tagfts").toString
+    val wh = tempDir("graft-tagfts").toString
     val l = new Library(spark, wh)
     // many untagged docs score much higher for "pepper"; the single
     // tagged doc mentions it once — it must still be found
@@ -105,7 +105,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("persisted FTS probe is partition-pruned to the query terms' buckets") {
-    val wh = Files.createTempDirectory("graft-ftsb").toString
+    val wh = tempDir("graft-ftsb").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("kumquat flavors appear in this document nicely. " * 10)),
@@ -148,7 +148,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("duplicate paths within one ingest batch collapse to one document") {
-    val wh = Files.createTempDirectory("graft-dup").toString
+    val wh = tempDir("graft-dup").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/same.md", "# Same\n" + ("identical content for the batch. " * 8)),
@@ -160,7 +160,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("getDocument precedence: exact id beats a title-substring match") {
-    val wh = Files.createTempDirectory("graft-prec").toString
+    val wh = tempDir("graft-prec").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/b.md", "# Target\n" + ("target doc content words here okay. " * 8))).toDS())
@@ -240,7 +240,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("ingest maintains the kNN edge artifact: fresh without a rebuild, delta == scratch (VERDICT r15 #3)") {
-    val wh = Files.createTempDirectory("graft-wh-knn").toString
+    val wh = tempDir("graft-wh-knn").toString
     val l = new Library(spark, wh)
     // the temp-dir suffix salts the corpus so its DiskArtifact stamp is
     // unique per run — a prior run's cached artifact would otherwise
@@ -289,7 +289,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("enableKnnEdges persists the edge source: bounded sources route the facade AND the ingest hook (VERDICT r18 #1b)") {
-    val wh = Files.createTempDirectory("graft-wh-knnsrc").toString
+    val wh = tempDir("graft-wh-knnsrc").toString
     val l = new Library(spark, wh)
     val salt = wh.split('/').last.takeRight(8)
     l.addMarkdown((1 to 5).map(i => (s"/es$i.md",
@@ -360,7 +360,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("auto edge source re-resolves on corpus growth; a pinned exact source is honored (VERDICT r19 #1)") {
-    val wh = Files.createTempDirectory("graft-wh-knngrow").toString
+    val wh = tempDir("graft-wh-knngrow").toString
     val l = new Library(spark, wh)
     val salt = wh.split('/').last.takeRight(8)
     l.addMarkdown((1 to 4).map(i => (s"/gr$i.md",
@@ -425,7 +425,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("removeDocument cascades to chunks and embeddings (S13)") {
-    val wh2 = Files.createTempDirectory("graft-wh2").toString
+    val wh2 = tempDir("graft-wh2").toString
     val l2 = new Library(spark, wh2)
     l2.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("alpha content words here for chunking purposes. " * 10)),
@@ -439,7 +439,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("repair keeps the FTS index consistent with the repaired tables") {
-    val wh = Files.createTempDirectory("graft-wh-repair").toString
+    val wh = tempDir("graft-wh-repair").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("alpha searchable content with unique tokens. " * 10)),
@@ -481,7 +481,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("removeDocument refreshes fts_stats so later BM25 N/avgdl are live") {
-    val wh = Files.createTempDirectory("graft-wh-rmstats").toString
+    val wh = tempDir("graft-wh-rmstats").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("alpha searchable content with unique tokens. " * 10)),
@@ -494,7 +494,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("pre-doclen warehouse migrates in place on first ftsSearch") {
-    val wh = Files.createTempDirectory("graft-wh-legacy").toString
+    val wh = tempDir("graft-wh-legacy").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("cardamom flavored legacy content here. " * 10))).toDS())
@@ -513,7 +513,7 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("migration during a batch append does not double-index the batch") {
-    val wh = Files.createTempDirectory("graft-wh-dblapp").toString
+    val wh = tempDir("graft-wh-dblapp").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("first batch content tokens for the index. " * 10))).toDS())
@@ -531,24 +531,24 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("exportTo copies the whole warehouse including taxonomy tables") {
-    val wh = Files.createTempDirectory("graft-wh-exp").toString
+    val wh = tempDir("graft-wh-exp").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("exportable content with some words. " * 10))).toDS())
     // a taxonomy sharing the warehouse — its tables are not rebuildable
     val tax = new TaxonomyStore(spark, wh, new graft.sources.HashingEmbedder(64))
-    val seedJson = Files.createTempFile("seed", ".json")
+    val seedJson = tempDir("seed").resolve("seed.json")
     Files.write(seedJson,
       """{"concepts": [{"id": "c1", "prefLabel": "Concept One"}]}""".getBytes)
     tax.seed(seedJson.toString)
-    val dest = Files.createTempDirectory("graft-exp-dest").toString
+    val dest = tempDir("graft-exp-dest").toString
     l.exportTo(dest)
     assert(spark.read.parquet(s"$dest/documents").count() === 1)
     assert(spark.read.parquet(s"$dest/concepts").count() === 1)
   }
 
   test("multiScaleSearch applies the threshold to summary hits too") {
-    val wh = Files.createTempDirectory("graft-wh-ms").toString
+    val wh = tempDir("graft-wh-ms").toString
     val l = new Library(spark, wh)
     l.addMarkdown(Seq(
       ("/a.md", "# A\n" + ("alpha topic content for clustering purposes. " * 10)),
@@ -564,7 +564,7 @@ class LibrarySpec extends SparkSpec {
     // its delete correctness IS the chunks rewrite — pin it end to end
     def mk(i: Int) = (s"/p/doc$i.md",
       s"# P$i\n" + (s"the quick brown fox jumps over fence number $i. " * 5))
-    val wh = Files.createTempDirectory("graft-phrase").toString
+    val wh = tempDir("graft-phrase").toString
     val l = new Library(spark, wh)
     l.addMarkdown((1 to 6).map(mk).toDS())
     def phrase(lib2: Library): Seq[(String, Long)] =
@@ -580,7 +580,7 @@ class LibrarySpec extends SparkSpec {
     assert(after.nonEmpty && !after.exists(_._1.startsWith(victim)))
     // byte-exact vs a rebuilt-from-scratch warehouse without the victim
     // (same paths -> same doc/chunk ids, so the comparison is direct)
-    val wh2 = Files.createTempDirectory("graft-phrase2").toString
+    val wh2 = tempDir("graft-phrase2").toString
     val l2 = new Library(spark, wh2)
     l2.addMarkdown((1 to 6).filter(_ != 3).map(mk).toDS())
     assert(after === phrase(l2))

@@ -3,7 +3,6 @@ package graft
 import graft.functions.TextFunctions
 import graft.operators.CorpusStats
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Round-15 maintained sketch states (VERDICT r14 #4): ingest-time
   * merge (HLL register max / CMS counter sum / KMV min-k union) must be
@@ -25,7 +24,7 @@ class SketchStateSpec extends SparkSpec {
         explode(TextFunctions.tokens(lower(col("content")))).as("t"))
 
   test("two ingest batches merge to the exact from-scratch sketch states") {
-    val wh = Files.createTempDirectory("graft-sketch").toString
+    val wh = tempDir("graft-sketch").toString
     val l = new Library(spark, wh)
     l.addMarkdown(docBatch("alpha", 8))
     l.addMarkdown(docBatch("beta", 6, from = 100))

@@ -11,10 +11,7 @@ import org.apache.spark.sql.functions._
 class TableSwapSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("swapspec").toFile
-    d.deleteOnExit(); d
-  }
+  private def tmpDir(): java.io.File = tempDir("swapspec").toFile
 
   test("rewrite through a file:-scheme URI replaces the table atomically") {
     val root = tmpDir()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -24,8 +23,7 @@ class TablesSpec extends SparkSpec {
   private val epochMicros = 1709659800123456L
 
   private def writeFixture(writer: String => Unit): String = {
-    val dir = Files.createTempDirectory("graft-events-fixture").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-events-fixture").toFile
     writer(dir.getAbsolutePath)
     dir.getAbsolutePath
   }

@@ -9,7 +9,7 @@ import java.nio.file.Files
 class TaxonomyStoreSpec extends SparkSpec {
 
   private lazy val store = {
-    val wh = Files.createTempDirectory("graft-tax").toString
+    val wh = tempDir("graft-tax").toString
     val json = s"""{
       "concepts": [
         {"id": "programming", "prefLabel": "Programming",
@@ -31,7 +31,7 @@ class TaxonomyStoreSpec extends SparkSpec {
         {"conceptId": "programming/rust", "relatedId": "education"}
       ]
     }"""
-    val f = Files.createTempFile("taxonomy", ".json")
+    val f = tempDir("taxonomy").resolve("taxonomy.json")
     Files.writeString(f, json)
     val s = new TaxonomyStore(spark, wh, new HashingEmbedder(64))
     s.seed(f.toString)
@@ -44,7 +44,7 @@ class TaxonomyStoreSpec extends SparkSpec {
     assert(store.relations.count() === 1)
     assert(store.conceptEmbeddings.count() === 4) // every concept embedded
     // re-seed: ON CONFLICT DO NOTHING semantics
-    val f = Files.createTempFile("taxonomy2", ".json")
+    val f = tempDir("taxonomy2").resolve("taxonomy2.json")
     Files.writeString(f,
       """{"concepts": [{"id": "programming", "prefLabel": "Programming"}]}""")
     store.seed(f.toString)
@@ -52,9 +52,9 @@ class TaxonomyStoreSpec extends SparkSpec {
   }
 
   test("seed dedups duplicate ids WITHIN one file (intra-batch)") {
-    val wh = Files.createTempDirectory("graft-tax-dup").toString
+    val wh = tempDir("graft-tax-dup").toString
     val s = new TaxonomyStore(spark, wh, new HashingEmbedder(64))
-    val f = Files.createTempFile("taxonomy-dup", ".json")
+    val f = tempDir("taxonomy-dup").resolve("taxonomy-dup.json")
     Files.writeString(f,
       """{"concepts": [
         {"id": "c1", "prefLabel": "One"},

@@ -2,7 +2,6 @@ package graft
 
 import graft.model.SearchOptions
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The O(delta) delete path (VERDICT r12 #3): merge-on-read tombstones
   * must be QUERY-EQUIVALENT to the rewrite path, must not rewrite any
@@ -14,7 +13,7 @@ class TombstoneSpec extends SparkSpec {
   // identical doc PATHS (and so identical ids) in every warehouse —
   // only the temp dir differs, so results compare across libraries
   private def mkLib(prefix: String, docs: Int = 24): Library = {
-    val wh = Files.createTempDirectory(prefix).toString
+    val wh = tempDir(prefix).toString
     val l = new Library(spark, wh)
     l.addMarkdown((1 to docs).map(i => (s"/tomb/doc$i.md",
       s"# Doc$i\n" + (s"tombstone corpus document number $i retrieval words. " * 6) +
@@ -93,7 +92,7 @@ class TombstoneSpec extends SparkSpec {
   }
 
   test("auto-compaction triggers at the row threshold") {
-    val wh = Files.createTempDirectory("tomb-auto").toString
+    val wh = tempDir("tomb-auto").toString
     val l = new Library(spark, wh, tombstoneCompactMinRows = 2)
     l.addMarkdown((1 to 8).map(i => (s"/auto/doc$i.md",
       s"# D$i\n" + (s"auto threshold corpus doc $i words here. " * 6))).toDS())

@@ -192,7 +192,7 @@ class ClusteringSpec extends SparkSpec {
     // union of probed cells' files — not the whole index
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val index = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_dpp").toString
+    val dir = tempDir("ivf_dpp").toString
     index.assigned.write.partitionBy("__cell").mode("overwrite").parquet(dir)
     val diskIdx = new IvfIndex(index.model,
       spark.read.parquet(dir), "embedding", "vec_id")

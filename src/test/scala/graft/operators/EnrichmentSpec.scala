@@ -3,7 +3,6 @@ package graft.operators
 import graft.{AutoEnricher, SparkSpec, TaxonomyStore}
 import graft.model.ProposedConcept
 import graft.sources.{ChatModel, HashingEmbedder}
-import java.nio.file.Files
 
 /** Records prompts and answers from a scripted table: judge prompts
   * (contain "taxonomy curator") get `judgeAnswer`; enrichment prompts
@@ -111,7 +110,7 @@ class EnrichmentSpec extends SparkSpec {
   // ------------------------------------------- orchestration (E6-E8)
 
   private def freshStore(): TaxonomyStore = {
-    val wh = Files.createTempDirectory("graft-enrich").toString
+    val wh = tempDir("graft-enrich").toString
     val s = new TaxonomyStore(spark, wh, new HashingEmbedder(64))
     s.addConcept("programming/rust", "Rust",
       definition = Some("The Rust programming language"))

@@ -115,7 +115,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("ingest after buildHnswIndex maintains the graph — new docs are findable") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-hnsw4").toString
+    val wh = tempDir("graft-hnsw4").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 25).map(i => (s"/hi/doc$i.md",
       s"# Doc$i\n" + (s"baseline corpus retrieval text $i body. " * 6)))
@@ -161,7 +161,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("cold hnswSearch works after removeDocumentFast + compactTombstones (ADVICE r13)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-hnsw3").toString
+    val wh = tempDir("graft-hnsw3").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 30).map(i => (s"/hc/doc$i.md",
       s"# Doc$i\n" + (s"compaction survivor corpus text $i search body. " * 6)))
@@ -189,7 +189,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("Library facade: hnswSearch ≈ exact vectorSearch; fast-deleted docs drop out") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
+    val wh = tempDir("graft-hnsw").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 40).map(i => (s"/hnsw/doc$i.md",
       s"# Doc$i\n" + (s"graph index corpus document $i retrieval body. " * 6)))
@@ -209,14 +209,14 @@ class HnswSpec extends SparkSpec {
     assert(!after.contains(victim))
     // no index -> clean fallback to the exact path
     val bare = new graft.Library(spark,
-      java.nio.file.Files.createTempDirectory("graft-hnsw2").toString)
+      tempDir("graft-hnsw2").toString)
     bare.addMarkdown(Seq(("/h2/a.md", "# A\nfallback body words. " * 8)).toDS())
     assert(bare.hnswSearch(qv, SearchOptions(limit = 3)).columns
       === bare.vectorSearch(qv, SearchOptions(limit = 3)).columns)
   }
 
   test("driver-residency budget: an over-budget corpus degrades LOUDLY to the exact scan, never a driver-side rebuild (VERDICT r18 #5)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-hnswbud").toString
+    val wh = tempDir("graft-hnswbud").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 12).map(i => (s"/hb/doc$i.md",
       s"# Doc$i\n" + (s"driver budget corpus words $i body here. " * 6)))

@@ -213,8 +213,8 @@ class MultimodalStreamingSpec extends SparkSpec {
   }
 
   test("streaming: markdown file-source ingest runs the batch chunker incrementally") {
-    val watch = java.nio.file.Files.createTempDirectory("graft-stream")
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-out")
+    val watch = tempDir("graft-stream")
+    val out = tempDir("graft-stream-out")
     val q = EventStreams.markdownIngestStream(spark, watch.toString)
       .writeStream.outputMode("append")
       .format("memory").queryName("ingest_test").start()

@@ -56,8 +56,7 @@ class ShardedExportSpec extends SparkSpec {
   }
 
   test("write lays shards on disk matching the manifest") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("shard_export").toString
+    val dir = tempDir("shard_export").toString
     val m = ShardedExport.write(rows.toDF("id", "toks"), "id", "toks",
       dir, shardTokens = 600L)
     val manifest = m.collect()

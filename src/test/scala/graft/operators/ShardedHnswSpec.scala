@@ -106,7 +106,7 @@ class ShardedHnswSpec extends SparkSpec {
   // ---------------------------------------------------------- persistence
 
   private def tempTier(prefix: String): (String, String) = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = tempDir(prefix).toString
     (s"$dir/shards", s"$dir/shards_meta")
   }
 
@@ -566,7 +566,7 @@ class ShardedHnswSpec extends SparkSpec {
     // save() assembles the new tier under _build_tmp, rewrites the
     // meta (stamped with a build id the manifest also carries), then
     // swaps the root. Simulate the two dangerous crash windows.
-    val wh = java.nio.file.Files.createTempDirectory("graft-torn").toString
+    val wh = tempDir("graft-torn").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 12).map(i => (s"/ts/doc$i.md",
       s"# Doc$i\n" + (s"torn save corpus text $i body words here. " * 6)))
@@ -613,7 +613,7 @@ class ShardedHnswSpec extends SparkSpec {
     // export must resolve through the manifest — a recursive read
     // would export the superseded epoch's blobs too, and a restored
     // warehouse would serve stale vectors for touched shards
-    val wh = java.nio.file.Files.createTempDirectory("graft-exp").toString
+    val wh = tempDir("graft-exp").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 12).map(i => (s"/ex/doc$i.md",
       s"# Doc$i\n" + (s"export corpus searchable text $i body words. " * 6)))
@@ -627,7 +627,7 @@ class ShardedHnswSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
     val want = rows(lib.shardedSearch(qv, opts))
-    val dest = java.nio.file.Files.createTempDirectory("graft-exp2").toString
+    val dest = tempDir("graft-exp2").toString
     lib.exportTo(dest)
     // the exported blob table has exactly ONE row per (cell, sub)
     val exported = spark.read.parquet(s"$dest/embeddings_hnsw_sharded")
@@ -645,7 +645,7 @@ class ShardedHnswSpec extends SparkSpec {
   }
 
   test("Library facade: enableShardedServing + ingest maintenance + cold reload") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-shnsw").toString
+    val wh = tempDir("graft-shnsw").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 25).map(i => (s"/sh/doc$i.md",
       s"# Doc$i\n" + (s"baseline sharded corpus retrieval text $i body. " * 6)))
@@ -681,7 +681,7 @@ class ShardedHnswSpec extends SparkSpec {
     assert(!ids(lib.shardedSearch(qv, opts)).contains(victim))
     // tier absent -> clean fallback to the exact path (same columns)
     val bare = new graft.Library(spark,
-      java.nio.file.Files.createTempDirectory("graft-shnsw2").toString)
+      tempDir("graft-shnsw2").toString)
     bare.addMarkdown(Seq(("/sh2/a.md", "# A\nfallback body words. " * 8)).toDS())
     assert(bare.shardedSearch(qv, graft.model.SearchOptions(limit = 3))
       .columns === bare.vectorSearch(qv,
@@ -694,7 +694,7 @@ class ShardedHnswSpec extends SparkSpec {
     // never shape. Each matrix state asserts row-identity with the
     // tier's own method (all are deterministic), so a mis-route shows
     // up as a row diff, not just a column diff.
-    val wh = java.nio.file.Files.createTempDirectory("graft-dispatch").toString
+    val wh = tempDir("graft-dispatch").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 20).map(i => (s"/dp/doc$i.md",
       s"# Doc$i\n" + (s"dispatch matrix corpus retrieval text $i body. " * 6)))
@@ -724,7 +724,7 @@ class ShardedHnswSpec extends SparkSpec {
     // insertPersisted's meta collect, one-job leaf write and narrow
     // stats read-back + 1 ids append = 5. A reintroduced second batch
     // action breaks the budget.
-    val wh = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val wh = tempDir("graft-jobs").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 10).map(i => (s"/jb/doc$i.md",
       s"# Doc$i\n" + (s"job budget corpus text $i body words here. " * 6)))
@@ -758,7 +758,7 @@ class ShardedHnswSpec extends SparkSpec {
   }
 
   test("Library facade: compactTombstones retires dead members, and a compacted chunkId re-ingests WITHOUT dropping the tier") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-shnsw4").toString
+    val wh = tempDir("graft-shnsw4").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 15).map(i => (s"/cp/doc$i.md",
       s"# Doc$i\n" + (s"compaction corpus searchable text $i body words. " * 6)))
@@ -809,7 +809,7 @@ class ShardedHnswSpec extends SparkSpec {
   }
 
   test("Library facade: compacting away EVERY indexed member drops the tier, and shardedSearch falls back cleanly") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-shnsw5").toString
+    val wh = tempDir("graft-shnsw5").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 6).map(i => (s"/fd/doc$i.md",
       s"# Doc$i\n" + (s"full drop corpus text $i words. " * 6))).toDS())
@@ -831,7 +831,7 @@ class ShardedHnswSpec extends SparkSpec {
   }
 
   test("Library facade: re-ingest under a recurring chunkId drops the tier instead of serving stale vectors") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-shnsw3").toString
+    val wh = tempDir("graft-shnsw3").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 12).map(i => (s"/st/doc$i.md",
       s"# Doc$i\n" + (s"stale detection corpus text $i body words. " * 6)))
@@ -1066,7 +1066,7 @@ class ShardedHnswSpec extends SparkSpec {
       f"mean probes ${probeSum.toDouble / qs9.length}%.2f vs fixed $auto9")
     assert(recall9 >= 0.99, s"skewed mass-default recall $recall9 < 0.99")
     // the Library facade routes through the conf
-    val wh = java.nio.file.Files.createTempDirectory("graft-mass").toString
+    val wh = tempDir("graft-mass").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 12).map(i => (s"/ms/doc$i.md",
       s"# Doc$i\n" + (s"mass budget corpus words $i body here. " * 6)))
@@ -1134,7 +1134,7 @@ class ShardedHnswSpec extends SparkSpec {
   }
 
   test("enableShardedServing default sizes the clustering to ceil(sqrt(n)) — the sqrt-N convention, not a fixed toy count") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-autocell").toString
+    val wh = tempDir("graft-autocell").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 30).map(i => (s"/ac/doc$i.md",
       s"# Doc$i\n" + (s"auto cell sizing corpus text $i body words. " * 6)))
@@ -1152,7 +1152,7 @@ class ShardedHnswSpec extends SparkSpec {
   }
 
   test("Library facade: out-of-band maintenance past the retention window self-heals; annSearch passes nProbe through") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-heal").toString
+    val wh = tempDir("graft-heal").toString
     val lib = new graft.Library(spark, wh)
     lib.addMarkdown((1 to 16).map(i => (s"/hl/doc$i.md",
       s"# Doc$i\n" + (s"self heal corpus retrieval text $i body words. " * 6)))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 
 /** `TextAnalysis.substringDedup` (Lee et al. 2022 ExactSubstr at k-gram
@@ -15,11 +14,10 @@ class SubstringDedupSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(docs: Seq[(Long, String)], k: Int, minCount: Long = 2L,
-                  family: String = TextFunctions.HashMd5,
                   keepFirst: Boolean = false): Map[Long, (Long, Long, Long, Double, String)] =
     collect(TextAnalysis.substringDedup(
       docs.toDF("doc_id", "text"), "doc_id", "text", k, minCount,
-      hashFamily = family, keepFirst = keepFirst))
+      keepFirst = keepFirst))
 
   private def collect(df: DataFrame): Map[Long, (Long, Long, Long, Double, String)] =
     df.collect().map(r => r.getLong(0) ->
@@ -168,17 +166,5 @@ class SubstringDedupSpec extends SparkSpec {
     val kf = run(docs, k = 50, keepFirst = true)
     assert(kf === brute(docs, k = 50, 2L, keepFirst = true))
     assert(kf(1L)._2 === 0L && kf(2L)._2 === 70L)
-  }
-
-  test("xxh64 production family reproduces the md5 verdicts") {
-    val rnd = new scala.util.Random(7)
-    val vocab = Vector("red", "green", "blue", "cyan", "teal", "gray")
-    val docs = (1L to 40L).map { id =>
-      val n = 3 + rnd.nextInt(25)
-      id -> Vector.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
-    }
-    val md5v = run(docs, k = 3)
-    val xxh = run(docs, k = 3, family = TextFunctions.HashXxh64)
-    assert(md5v === xxh)
   }
 }

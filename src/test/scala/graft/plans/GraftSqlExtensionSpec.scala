@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The SQL surface of the ANN tier (VERDICT r19 #6): `spark.sql(...)`
   * must build the SAME pruned plans the Scala facade builds —
@@ -74,7 +73,7 @@ class GraftSqlExtensionSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0).toArray
     val qSql = q.map(_.toDouble).mkString("array(", ", ", ")")
-    val idxPath = Files.createTempDirectory("graft-sqltvf").toString + "/emb"
+    val idxPath = tempDir("graft-sqltvf").toString + "/emb"
     IvfIndex.persist(emb, "vec_id", "embedding", nCells = 8,
       path = idxPath, nProbe = 2)
     try {
@@ -147,7 +146,7 @@ class GraftSqlExtensionSpec extends SparkSpec {
       val emb = s2.read.parquet(s"$sf/embeddings.parquet")
       val q = emb.filter(col("vec_id") === 7).select("embedding")
         .head().getSeq[Float](0).toArray
-      val idxPath = Files.createTempDirectory("graft-sqlext").toString + "/emb"
+      val idxPath = tempDir("graft-sqlext").toString + "/emb"
       IvfIndex.persist(emb, "vec_id", "embedding", nCells = 8,
         path = idxPath, nProbe = 2)
       s2.read.parquet(idxPath).createOrReplaceTempView("ivf_emb")

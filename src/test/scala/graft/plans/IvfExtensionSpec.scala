@@ -3,7 +3,6 @@ package graft.plans
 import graft.SparkSpec
 import graft.operators.{IvfIndex, VectorSearch}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The optimizer-rule tier: a plain declarative top-k over the persisted
   * IVF table must get rewritten into a cell-pruned probe, visible as a
@@ -21,7 +20,7 @@ class IvfExtensionSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = emb.filter(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0).toArray
-    val idxPath = Files.createTempDirectory("graft-ivf").toString + "/emb"
+    val idxPath = tempDir("graft-ivf").toString + "/emb"
     IvfIndex.persist(emb, "vec_id", "embedding", nCells = 8,
       path = idxPath, nProbe = 2)
 
@@ -52,7 +51,7 @@ class IvfExtensionSpec extends SparkSpec {
   test("probe rule always probes the delta bucket: appends stay visible") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = Array.fill(64)(0.5f) // nowhere near any corpus vector
-    val idxPath = Files.createTempDirectory("graft-ivf4").toString + "/emb"
+    val idxPath = tempDir("graft-ivf4").toString + "/emb"
     IvfIndex.persist(emb, "vec_id", "embedding", nCells = 8,
       path = idxPath, nProbe = 2)
     // append a vector equal to the query into the delta bucket, the way
@@ -80,7 +79,7 @@ class IvfExtensionSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = emb.filter(col("vec_id") === 3).select("embedding")
       .head().getSeq[Float](0).toArray
-    val idxPath = Files.createTempDirectory("graft-ivf2").toString + "/emb"
+    val idxPath = tempDir("graft-ivf2").toString + "/emb"
     IvfIndex.persist(emb, "vec_id", "embedding", nCells = 4,
       path = idxPath, nProbe = 1)
     try {
@@ -101,7 +100,7 @@ class IvfExtensionSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = emb.filter(col("vec_id") === 3).select("embedding")
       .head().getSeq[Float](0).toArray
-    val idxPath = Files.createTempDirectory("graft-ivf3").toString + "/emb"
+    val idxPath = tempDir("graft-ivf3").toString + "/emb"
     IvfIndex.persist(emb, "vec_id", "embedding", nCells = 4,
       path = idxPath, nProbe = 1)
     try {

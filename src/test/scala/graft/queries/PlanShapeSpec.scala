@@ -227,36 +227,22 @@ class PlanShapeSpec extends SparkSpec {
       "interval merge must be the aggregate-HOF fold, not a window/cross product:\n" + p)
   }
 
-  test("hash families: the xxh64 production mode keeps the md5 plan shape") {
+  test("minhash keeps the banded equi-join shape; DSIR scores map-only") {
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    def dedupPlan(fam: String): String = {
-      val out = graft.operators.Dedup.minhashDupPairs(
-        docs, "doc_id", "text", hashFamily = fam)
-      out.collect()
-      out.queryExecution.executedPlan.toString
-    }
-    def dsirPlan(fam: String): String = {
-      val out = graft.operators.ImportanceSampling.dsirWeights(
-        docs, "doc_id", "text", col("doc_id") % 5 === 0, hashFamily = fam)
-      out.collect()
-      out.queryExecution.executedPlan.toString
-    }
-    Seq("md5", "xxh64").foreach { fam =>
-      val d = dedupPlan(fam)
-      assert(!d.contains("CartesianProduct") &&
-        !d.contains("BroadcastNestedLoopJoin") && !d.contains("Window"),
-        s"minhash[$fam] must keep the banded equi-join shape:\n$d")
-      val w = dsirPlan(fam)
-      // round 20: md5 scores map-only (ratio table as expression
-      // state); the xxh64 column path keeps the stats broadcast join
-      if (fam == "md5")
-        assert(!w.contains("Join"), s"dsir[md5] must score map-only:\n$w")
-      else
-        assert(w.contains("BroadcastHashJoin"),
-          s"dsir[$fam] stats side must broadcast:\n$w")
-      assert(!w.contains("CartesianProduct"), w)
-    }
+    val dedup = graft.operators.Dedup.minhashDupPairs(docs, "doc_id", "text")
+    dedup.collect()
+    val d = dedup.queryExecution.executedPlan.toString
+    assert(!d.contains("CartesianProduct") &&
+      !d.contains("BroadcastNestedLoopJoin") && !d.contains("Window"),
+      s"minhash must keep the banded equi-join shape:\n$d")
+    val dsir = graft.operators.ImportanceSampling.dsirWeights(
+      docs, "doc_id", "text", col("doc_id") % 5 === 0)
+    dsir.collect()
+    // round 20: the ratio table is expression state, so no join at all
+    val w = dsir.queryExecution.executedPlan.toString
+    assert(!w.contains("Join"), s"dsir must score map-only:\n$w")
+    assert(!w.contains("CartesianProduct"), w)
   }
 
   test("q81: batched IVF probe pairs queries with probed cells, never the full corpus") {

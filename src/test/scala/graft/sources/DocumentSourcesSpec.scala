@@ -26,7 +26,7 @@ class DocumentSourcesSpec extends SparkSpec {
   }
 
   test("directory ingest: discovery, routing, dedup, export (S1/S4/S12)") {
-    val srcDir = Files.createTempDirectory("graft-src")
+    val srcDir = tempDir("graft-src")
     Files.writeString(srcDir.resolve("notes.md"),
       "# Notes\n" + ("markdown words for the chunker to process. " * 10))
     // a REAL two-page PDF (flate + plain content streams) through the
@@ -34,7 +34,7 @@ class DocumentSourcesSpec extends SparkSpec {
     Files.write(srcDir.resolve("paper.pdf"), PdfFixtures.twoPage())
     Files.writeString(srcDir.resolve("ignored.txt"), "not ingestable")
 
-    val wh = Files.createTempDirectory("graft-wh-ing").toString
+    val wh = tempDir("graft-wh-ing").toString
     val lib = new Library(spark, wh)
     lib.ingestDirectory(srcDir.toString)
 
@@ -65,7 +65,7 @@ class DocumentSourcesSpec extends SparkSpec {
     assert(lib.stats() === ((nd, nc, ne)))
 
     // export produces a readable warehouse copy
-    val dest = Files.createTempDirectory("graft-exp").toString
+    val dest = tempDir("graft-exp").toString
     lib.exportTo(dest)
     val copy = new Library(spark, dest)
     assert(copy.stats() === ((nd, nc, ne)))
@@ -89,11 +89,11 @@ class DocumentSourcesSpec extends SparkSpec {
   }
 
   test("addUrl ingests file:// markdown and PDF end-to-end (S3)") {
-    val src = Files.createTempDirectory("graft-url")
+    val src = tempDir("graft-url")
     Files.writeString(src.resolve("notes.md"),
       "# UrlNotes\n" + ("fetched markdown words to index and search. " * 10))
     Files.write(src.resolve("paper.pdf"), PdfFixtures.twoPage())
-    val wh = Files.createTempDirectory("graft-wh-url").toString
+    val wh = tempDir("graft-wh-url").toString
     val lib = new Library(spark, wh)
 
     val mdUrl = src.resolve("notes.md").toUri.toString
@@ -124,7 +124,7 @@ class DocumentSourcesSpec extends SparkSpec {
     })
     server.start()
     try {
-      val wh = Files.createTempDirectory("graft-wh-http").toString
+      val wh = tempDir("graft-wh-http").toString
       val lib = new Library(spark, wh)
       lib.addUrl(s"http://127.0.0.1:${server.getAddress.getPort}/doc")
       val doc = lib.documents.head()

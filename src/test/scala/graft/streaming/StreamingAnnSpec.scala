@@ -15,7 +15,7 @@ class StreamingAnnSpec extends SparkSpec {
     .select("vec_id", "embedding")
 
   private def tempTier(): (String, String, String) = {
-    val dir = java.nio.file.Files.createTempDirectory("sann").toString
+    val dir = tempDir("sann").toString
     (s"$dir/shards", s"$dir/shards_meta", s"$dir/ckpt")
   }
 

@@ -31,11 +31,7 @@ class StreamingIngestSpec extends SparkSpec {
       |without collapsing rows like a group by would.
       |""".stripMargin
 
-  private def tmp(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   test("stream-ingested corpus ≡ batch-ingested corpus for search and ftsSearch") {
     import spark.implicits._

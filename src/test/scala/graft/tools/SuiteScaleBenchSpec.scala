@@ -14,7 +14,7 @@ class SuiteScaleBenchSpec extends SparkSpec {
 
   private val factor = 3
   private lazy val dst = {
-    val d = java.nio.file.Files.createTempDirectory("scale-synth").toString
+    val d = tempDir("scale-synth").toString
     SuiteScaleBench.synthesize(spark, sf, d, factor)
     d
   }
