@@ -53,12 +53,15 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   private def path(t: String) = s"$warehouse/$t"
 
+  /** Fresh reads of the three corpus tables, tombstones applied — what
+    * the write paths build on. Searches read through [[serving]]. */
   def documents: DataFrame =
-    antiTomb(spark.read.parquet(path("documents")), "id", docTombstones)
+    Library.antiTomb(spark.read.parquet(path("documents")), "id", docTombstones)
   def chunks: DataFrame =
-    antiTomb(spark.read.parquet(path("chunks")), "id", chunkTombstones)
+    Library.antiTomb(spark.read.parquet(path("chunks")), "id", chunkTombstones)
   def embeddings: DataFrame =
-    antiTomb(spark.read.parquet(path("embeddings")), "chunkId", chunkTombstones)
+    Library.antiTomb(spark.read.parquet(path("embeddings")), "chunkId",
+      chunkTombstones)
 
   // ------------------------------------------------ deletion vectors
   // Merge-on-read tombstones (round 13, VERDICT r12 #3): a delete
@@ -83,10 +86,6 @@ class Library(val spark: SparkSession, val warehouse: String,
     if (tombstonesExist)
       Some(tombstonesRaw.filter(col("kind") === "chunk").select("id"))
     else None
-  private def antiTomb(df: DataFrame, key: String,
-                       tombs: Option[DataFrame]): DataFrame =
-    tombs.fold(df)(t =>
-      df.join(broadcast(t.withColumnRenamed("id", key)), Seq(key), "left_anti"))
 
   /** S13 at 100 TB (the O(delta) path): hide the document and its
     * cascade behind tombstones — reads only the delete-relevant keys
@@ -209,6 +208,41 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   private def tableExists(t: String) =
     fs.exists(new HPath(s"${path(t)}/_SUCCESS"))
+
+  private val pinned =
+    new java.util.concurrent.atomic.AtomicReference[ServingSnapshot]()
+
+  /** The snapshot searches read through: the pinned one while every
+    * served table's commit marker is unchanged, else a new one (see
+    * [[ServingSnapshot]]). A postings layout from an older release is
+    * rebuilt here, once, before a snapshot serves from it. */
+  private[graft] def serving(): ServingSnapshot = {
+    val key = ServingSnapshot.probe(fs, warehouse)
+    val cur = pinned.get
+    if (cur != null && cur.key == key) cur
+    else if (migrateLegacyFtsLayout()) serving() // the rebuild moved the key
+    else {
+      val snap = new ServingSnapshot(spark, warehouse, key)
+      pinned.set(snap)
+      snap
+    }
+  }
+
+  /** Rewrite a table's commit marker after a change made by renaming or
+    * deleting its partition leaves, which Spark's own marker write does
+    * not cover. The new marker is strictly newer than the old one, so
+    * a pinned [[ServingSnapshot]] of the table is never reused. */
+  private def recommit(t: String): Unit = {
+    val marker = new HPath(s"${path(t)}/_SUCCESS")
+    if (fs.exists(marker.getParent)) {
+      val before =
+        if (fs.exists(marker)) fs.getFileStatus(marker).getModificationTime
+        else -1L
+      fs.create(marker, true).close()
+      if (fs.getFileStatus(marker).getModificationTime <= before)
+        fs.setTimes(marker, before + 1, -1)
+    }
+  }
 
   // ---------------------------------------------------------------- ingest
 
@@ -411,24 +445,20 @@ class Library(val spark: SparkSession, val warehouse: String,
     * Shared with the optimizer rule, which must also always probe it. */
   private val DeltaCell = graft.plans.IvfRegistry.DeltaCell
 
-  private def ivfScored(queryVec: Array[Float]): Option[DataFrame] =
-    if (!tableExists("embeddings_ivf_meta")) None
-    else {
+  private def ivfScored(snap: ServingSnapshot,
+                        queryVec: Array[Float]): Option[DataFrame] =
+    snap.ivf.map { ivf =>
       // centroids persist with the index (tiny), so the probe survives
       // session restarts; exact re-rank happens inside the probed cells
-      val meta = spark.read.parquet(path("embeddings_ivf_meta"))
-        .orderBy("cell").collect()
-      val centers = meta.map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
-      val nProbe = meta.head.getAs[Int]("nProbe")
       val cells = graft.plans.IvfRegistry.probeCells(
-        centers, queryVec.map(_.toDouble), nProbe)
+        ivf.centers, queryVec.map(_.toDouble), ivf.nProbe)
       // the delta bucket (appends since the last rebuild) is ALWAYS
       // probed — see appendToVectorIndex. Tombstoned vectors leave the
       // probe slice BEFORE the top-k cut (they stay physical until
       // compaction)
-      Some(antiTomb(spark.read.parquet(path("embeddings_ivf"))
-        .filter(col("__cell").isin((cells :+ DeltaCell): _*)),
-        "chunkId", chunkTombstones))
+      Library.antiTomb(
+        ivf.cells.filter(col("__cell").isin((cells :+ DeltaCell): _*)),
+        "chunkId", snap.chunkTombstones)
     }
 
   /** Vectors appended after an index build land in an always-probed
@@ -504,6 +534,7 @@ class Library(val spark: SparkSession, val warehouse: String,
       .parquet(path("embeddings_ivf"))
     graft.util.TableSwap.delete(fs,
       new HPath(path(s"embeddings_ivf/__cell=$DeltaCell")))
+    recommit("embeddings_ivf")
     val builtRows =
       if (meta.columns.contains("builtRows")) col("builtRows")
       else lit(indexed) // legacy meta: current size was the fitted size
@@ -517,10 +548,11 @@ class Library(val spark: SparkSession, val warehouse: String,
     * TakeOrdered k, then join chunk content and broadcast document
     * metadata. Tag/threshold filters push below the top-k. */
   def vectorSearch(queryVec: Array[Float], opts: SearchOptions): DataFrame = {
-    val ch = chunks
-    val docs = tagFiltered(opts.tags)
+    val snap = serving()
+    val ch = snap.chunks
+    val docs = snap.docsTagged(opts.tags)
       .select(col("id").as("docId"), col("title"))
-    val base = ivfScored(queryVec).getOrElse(embeddings)
+    val base = ivfScored(snap, queryVec).getOrElse(snap.embeddings)
     val scored = base
       .withColumn("score",
         VectorFunctions.distToScore(lit(1.0) -
@@ -1062,11 +1094,10 @@ class Library(val spark: SparkSession, val warehouse: String,
         // point is sublinear serving, and a wide-vector corpus scan
         // for id mapping would defeat it (the ids table is ~16x
         // narrower than embeddings at dim 64, more at real dims)
-        val idMap = spark.read
-          .parquet(path("embeddings_hnsw_sharded_ids"))
-          .select(xxhash64(col("chunkId")).as("id"), col("chunkId"))
-        rankAnnHits(
-          scored.join(idMap, Seq("id")).select("chunkId", "score"), opts)
+        val snap = serving()
+        rankAnnHits(snap,
+          scored.join(snap.shardedIds, Seq("id")).select("chunkId", "score"),
+          opts)
     }
 
   /** Centroid-drift watermark reading for the sharded serving tier
@@ -1244,7 +1275,7 @@ class Library(val spark: SparkSession, val warehouse: String,
         .searchKnn(g, queryVec, math.max(opts.limit * 2, 16),
           math.max(ef, opts.limit * 2))
         .map { case (sid, d) => (cids(sid.toInt), 1.0 - d / 2.0) }
-      rankAnnHits(hits.toSeq.toDF("chunkId", "score"), opts)
+      rankAnnHits(serving(), hits.toSeq.toDF("chunkId", "score"), opts)
   }
 
   /** Serving auto-dispatch (VERDICT r17 #8): route a vector query to
@@ -1262,14 +1293,12 @@ class Library(val spark: SparkSession, val warehouse: String,
     * see [[shardedSearch]]. The other tiers ignore `nProbe`; `ef` also
     * reaches [[hnswSearch]]. */
   def annSearch(queryVec: Array[Float], opts: SearchOptions,
-                nProbe: Int = -1, ef: Int = 64): DataFrame =
-    if (tableExists("embeddings_hnsw_sharded_meta") &&
-        tableExists("embeddings_hnsw_sharded") &&
-        tableExists("embeddings_hnsw_sharded_ids"))
-      shardedSearch(queryVec, opts, nProbe, ef)
-    else if (tableExists("embeddings_hnsw_meta"))
-      hnswSearch(queryVec, opts, ef)
+                nProbe: Int = -1, ef: Int = 64): DataFrame = {
+    val snap = serving()
+    if (snap.shardedTier) shardedSearch(queryVec, opts, nProbe, ef)
+    else if (snap.hnswTier) hnswSearch(queryVec, opts, ef)
     else vectorSearch(queryVec, opts)
+  }
 
   /** Shared tail of the graph-ANN serving paths ([[hnswSearch]],
     * [[shardedSearch]]): shape a (chunkId, score) candidate frame into
@@ -1278,12 +1307,12 @@ class Library(val spark: SparkSession, val warehouse: String,
     * docs join, the seven-column select and the (score desc, docId,
     * chunkIndex) order + limit. One definition so the ANN tiers can
     * never drift apart in shape. */
-  private def rankAnnHits(hitDf: DataFrame, opts: SearchOptions)
-      : DataFrame = {
+  private def rankAnnHits(snap: ServingSnapshot, hitDf: DataFrame,
+                          opts: SearchOptions): DataFrame = {
     val thresholded = opts.threshold
       .map(t => hitDf.filter(col("score") >= t)).getOrElse(hitDf)
-    val ch = chunks
-    val docs = tagFiltered(opts.tags)
+    val ch = snap.chunks
+    val docs = snap.docsTagged(opts.tags)
       .select(col("id").as("docId"), col("title"))
     thresholded
       .join(ch.select(col("id").as("chunkId"), col("docId"), col("page"),
@@ -1324,13 +1353,6 @@ class Library(val spark: SparkSession, val warehouse: String,
       .coalesce(1)
       .write.mode(mode).parquet(path("fts_stats"))
 
-  private def readFtsStats(): (Long, Long) = {
-    val r = spark.read.parquet(path("fts_stats"))
-      .agg(coalesce(sum(col("n_docs")), lit(0L)),
-        coalesce(sum(col("total_len")), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** Persisted-postings layout: hive-partitioned on the term's hash
     * bucket (so a query-term probe is partition-pruned) and term-sorted
     * within each bucket (so parquet row-group stats prune further).
@@ -1341,18 +1363,17 @@ class Library(val spark: SparkSession, val warehouse: String,
       .sortWithinPartitions("term", "id")
       .write.mode(mode).partitionBy("__tb").parquet(path("fts_postings"))
 
-  /** The persisted postings slice for `terms`: partition-pruned to the
-    * query terms' hash buckets, `__tb` dropped so downstream sees the
-    * plain (id, term, tf) shape. The caller has already run
-    * [[migrateLegacyFtsLayout]]. */
-  private def prunedPostings(terms: Seq[String]): DataFrame = {
+  /** The slice of the persisted `postings` for `terms`: partition-pruned
+    * to the query terms' hash buckets, `__tb` dropped so downstream sees
+    * the plain (id, term, tf) shape. */
+  private def prunedPostings(postings: DataFrame,
+                             terms: Seq[String]): DataFrame = {
     // Locale.ROOT, NOT the default locale: the indexed terms were lowered
     // with Spark's locale-independent lower(); under tr/az 'I'.toLowerCase
     // is 'ı', which hashes to a different bucket and silently drops hits
     val buckets = terms
       .map(t => Bm25.termBucket(t.toLowerCase(java.util.Locale.ROOT))).distinct
-    spark.read.parquet(path("fts_postings"))
-      .filter(col("__tb").isin(buckets: _*))
+    postings.filter(col("__tb").isin(buckets: _*))
       .drop("__tb")
   }
 
@@ -1430,6 +1451,7 @@ class Library(val spark: SparkSession, val warehouse: String,
         }
         graft.util.TableSwap.delete(fs, new HPath(retired))
         graft.util.TableSwap.delete(fs, new HPath(scratch))
+        recommit("embeddings_ivf")
         val removedIndexed =
           affected.collect { case (c, n) if c != DeltaCell => n }.sum
         // a delta-only delete decrements nothing — skip the meta swap
@@ -1463,33 +1485,30 @@ class Library(val spark: SparkSession, val warehouse: String,
     * persisted index when present (probe = pruned scan of the postings
     * slice), falling back to an on-the-fly index over the chunk scan. */
   def ftsSearch(query: String, opts: SearchOptions): DataFrame = {
-    val ch = chunks
-    val docs = tagFiltered(opts.tags)
+    val snap = serving()
+    val ch = snap.chunks
+    val docs = snap.docsTagged(opts.tags)
       .select(col("id").as("docId"), col("title"))
     val terms = query.toLowerCase(java.util.Locale.ROOT)
       .split("\\s+").filter(_.nonEmpty).toSeq
     // FTS5 semantics: score globally, apply predicates (tags), THEN
     // limit — limiting before the tag join would let untagged top
     // scorers crowd out every tagged match
-    val hits =
-      if (tableExists("fts_postings")) {
-        // migrate BEFORE reading stats: a pre-doclen warehouse has no
-        // fts_stats table yet, and readFtsStats would throw rather than
-        // upgrade in place
-        migrateLegacyFtsLayout()
+    val hits = snap.ftsPostings match {
+      case Some(postings) =>
         // the scale path: stats from the O(#writes) stats table, doclen
         // from the probe slice itself — NO fts_lens scan or join
-        val (n, totalLen) = readFtsStats()
+        val (n, totalLen) = snap.ftsStats
         val avgdl = if (n > 0) totalLen.toDouble / n.toDouble else 1.0
         // tombstoned chunks leave the slice BEFORE scoring, so df/N see
         // only live docs — score-exact with the rewrite path
         Bm25.scoreAllDenorm(
-          antiTomb(Bm25.termSlice(prunedPostings(terms), terms), "id",
-            chunkTombstones), n, avgdl)
-      } else {
+          Library.antiTomb(Bm25.termSlice(prunedPostings(postings, terms),
+            terms), "id", snap.chunkTombstones), n, avgdl)
+      case None =>
         val lens = Bm25.docLengths(ch, "id", "content").materializeOnce(eager = false)
         Bm25.scoreAllFromIndex(Bm25.postings(ch, "id", "content"), lens, terms)
-      }
+    }
     // rank on narrow columns (ids + score + tag predicate), and fetch
     // the wide content column for only the k survivors
     val ranked = hits
@@ -1557,8 +1576,8 @@ class Library(val spark: SparkSession, val warehouse: String,
     * with MinChunkChars ~20 a 600-char budget can admit ~30 chunks, so
     * the candidate window must not bind before the budget does. */
   def expandContext(hits: DataFrame, maxChars: Int, window: Int = 32): DataFrame =
-    ContextExpansion.expand(hits, chunks, "docId", "chunkIndex", "content",
-      window, maxChars)
+    ContextExpansion.expand(hits, serving().chunks, "docId", "chunkIndex",
+      "content", window, maxChars)
 
   // ------------------------------------------------------- RAPTOR (M1-M7)
 
@@ -1615,7 +1634,7 @@ class Library(val spark: SparkSession, val warehouse: String,
   def multiScaleSearch(query: String, opts: SearchOptions = SearchOptions()): DataFrame = {
     val qv = embedder.embed(query)
     val chunkHits = vectorSearch(qv, opts)
-    val summaryScored = clusterSummaries
+    val summaryScored = serving().clusterSummaries
       .withColumn("score",
         VectorFunctions.distToScore(lit(1.0) -
           graft.plans.CosineSimilarity(col("embedding"),
@@ -1636,11 +1655,6 @@ class Library(val spark: SparkSession, val warehouse: String,
       .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
       .limit(opts.limit)
   }
-
-  private def tagFiltered(tags: Seq[String]): DataFrame =
-    if (tags.isEmpty) documents
-    else documents.filter(arrays_overlap(col("tags"),
-      lit(tags.toArray))) // F2 semantics: any-tag-matches
 
   // ------------------------------------------------------------- doc ops
 
@@ -1733,6 +1747,7 @@ class Library(val spark: SparkSession, val warehouse: String,
       val n = Option(cell.group(1)).getOrElse(DeltaCell.toString)
       restoreIfMissing(new HPath(path(s"embeddings_ivf/__cell=$n")), old)
     }
+    if (scratch.exists(_.getName.endsWith("_old"))) recommit("embeddings_ivf")
     scratch.foreach(graft.util.TableSwap.delete(fs, _))
     // sharded-HNSW single-leaf swaps keep the same cell-in-the-name
     // scratch convention; the tier's writer owns the heal logic
@@ -1753,7 +1768,7 @@ class Library(val spark: SparkSession, val warehouse: String,
     * [[removeFromVectorIndex]]. */
   private def restoreStrandedCellSwap(): Unit = {
     val swapOld = new HPath(path("embeddings_ivf_swap_old"))
-    if (fs.exists(swapOld))
+    if (fs.exists(swapOld)) {
       fs.listStatus(swapOld).filter(_.getPath.getName.startsWith("__cell="))
         .foreach { st =>
           val live = new HPath(path(s"embeddings_ivf/${st.getPath.getName}"))
@@ -1761,6 +1776,8 @@ class Library(val spark: SparkSession, val warehouse: String,
             throw new java.io.IOException(
               s"crash recovery failed restoring $live")
         }
+      recommit("embeddings_ivf")
+    }
     graft.util.TableSwap.delete(fs, swapOld)
     graft.util.TableSwap.delete(fs, new HPath(path("embeddings_ivf_swap_tmp")))
   }
@@ -1850,6 +1867,7 @@ class Library(val spark: SparkSession, val warehouse: String,
     else
       graft.util.TableSwap.rewriteVia(deltaLeaf, keep,
         path("embeddings_ivf_delta_tmp"), path("embeddings_ivf_delta_old"))
+    recommit("embeddings_ivf")
   }
 
   private def rewrite(table: String, df: DataFrame): Unit =
@@ -1867,6 +1885,13 @@ class Library(val spark: SparkSession, val warehouse: String,
 }
 
 object Library {
+  /** `df` without the rows whose `key` is in the tombstone ids `tombs`
+    * (a broadcast anti-join; `df` itself when there are none). */
+  private[graft] def antiTomb(df: DataFrame, key: String,
+                              tombs: Option[DataFrame]): DataFrame =
+    tombs.fold(df)(t =>
+      df.join(broadcast(t.withColumnRenamed("id", key)), Seq(key), "left_anti"))
+
   /** Every table a warehouse may hold — the export set and the crash
     * sweep's recovery inventory. */
   private[graft] val AllTables = Seq("documents", "chunks", "embeddings",

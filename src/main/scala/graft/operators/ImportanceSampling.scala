@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.TextFunctions.{portableHash32, tokens}
 import graft.util.Materialize.MatOps
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
@@ -27,23 +26,13 @@ import org.apache.spark.sql.functions._
   * are one slim (bucket, count) shuffle collapsed to a driver-side
   * array of at most `buckets` ratios, and scoring folds each histogram
   * against that array map-only (see [[dsirWeightsNative]]). Hashing is
-  * the portable md5-derived [[portableHash32]], so weights are
+  * the portable md5-derived
+  * [[graft.functions.TextFunctions.portableHash32]], so weights are
   * reproducible cross-engine and cross-run bit-for-bit (up to the
   * documented <=1-ulp log10 gap, absorbed by 6dp rounding at output
   * boundaries).
   */
 object ImportanceSampling {
-
-  /** Word unigrams + bigrams with multiplicity (DSIR's feature stream —
-    * counts, not sets; tokenization matches [[tokens]] exactly and the
-    * bigram construction is the shared
-    * [[graft.functions.TextFunctions.bigramPairs]]). */
-  private def grams(textLower: Column): Column = {
-    val t = tokens(textLower)
-    val bi = transform(graft.functions.TextFunctions.bigramPairs(t),
-      p => concat(p.getField("prev"), lit(" "), p.getField("cur")))
-    concat(t, bi)
-  }
 
   /** Per-document DSIR importance weights.
     *
@@ -67,47 +56,6 @@ object ImportanceSampling {
                   isTarget: Column, buckets: Int = 4096): DataFrame = {
     require(buckets > 0, "buckets must be positive")
     dsirWeightsNative(df, idCol, textCol, isTarget, buckets)
-  }
-
-  /** The pre-round-20 explode → shuffle → broadcast-join formulation —
-    * the bit-identity reference the spec pins [[dsirWeights]] against. */
-  private[operators] def dsirWeightsColumns(
-      df: DataFrame, idCol: String, textCol: String, isTarget: Column,
-      buckets: Int): DataFrame = {
-    val base = df.select(col(idCol).as("id"),
-      coalesce(isTarget.cast("int"), lit(0)).as("is_target"),
-      grams(lower(col(textCol))).as("__gs"))
-    // one slim keyed shuffle: (id, bucket) ints, map-side combined
-    val perDoc = base
-      .select(col("id"), col("is_target"),
-        explode(col("__gs")).as("g"))
-      .withColumn("__b", portableHash32(col("g")) % buckets)
-      .groupBy("id", "is_target", "__b")
-      .agg(count(lit(1)).as("n"))
-      .materializeOnce(eager = false) // two consumers: stats + scoring
-    // bucket statistics: <= `buckets` rows, the broadcast side of the
-    // scoring join; totals are a single aggregate row cross-joined in
-    val stats = perDoc.groupBy("__b").agg(
-      sum(when(col("is_target") === 1, col("n")).otherwise(lit(0L))).as("ct"),
-      sum(when(col("is_target") === 0, col("n")).otherwise(lit(0L))).as("cs"))
-    val totals = stats.agg(
-      coalesce(sum("ct"), lit(0L)).as("nt"),
-      coalesce(sum("cs"), lit(0L)).as("ns"))
-    val ratios = stats.crossJoin(broadcast(totals))
-      .select(col("__b"),
-        (log10((col("ct").cast("double") + lit(1.0)) /
-               (col("nt").cast("double") + lit(buckets.toDouble))) -
-         log10((col("cs").cast("double") + lit(1.0)) /
-               (col("ns").cast("double") + lit(buckets.toDouble)))).as("lr"))
-    val weights = perDoc.join(broadcast(ratios), Seq("__b"))
-      .groupBy("id")
-      .agg(sum("n").as("n_grams"),
-        sum(col("n").cast("double") * col("lr")).as("weight"))
-    base.select(col("id"), col("is_target"))
-      .join(weights, Seq("id"), "left")
-      .select(col("id"), col("is_target"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("weight"), lit(0.0)).as("weight"))
   }
 
   /** Round-20 native path (guide §2.3/§2.4): the per-doc feature

@@ -36,8 +36,8 @@ object QualityClassifier {
                             weights: Array[Double])
 
   /** Hashed (bucket, count) rows per doc — DSIR's feature stream. */
-  private def bucketCounts(df: DataFrame, idCol: String, textCol: String,
-                           buckets: Int): DataFrame = {
+  private[operators] def bucketCounts(df: DataFrame, idCol: String,
+                                      textCol: String, buckets: Int): DataFrame = {
     val t = TextFunctions.tokens(lower(col(textCol)))
     val bi = transform(TextFunctions.bigramPairs(t),
       p => concat(p.getField("prev"), lit(" "), p.getField("cur")))
@@ -125,33 +125,6 @@ object QualityClassifier {
         coalesce(col("__d.n_grams"), lit(0L)).as("n_grams"),
         (lit(model.intercept) + coalesce(col("__d.dot"), lit(0.0))).as("z"))
       .withColumn("score", lit(1.0) / (lit(1.0) + exp(-col("z"))))
-  }
-
-  /** The pre-round-20 explode → groupBy → array_sort formulation — the
-    * bit-identity reference the spec pins [[scoreWithMargin]] against. */
-  private[operators] def scoreWithMarginColumns(
-      df: DataFrame, idCol: String, textCol: String,
-      model: LrQualityModel): DataFrame = {
-    val spark = df.sparkSession
-    val wdf = broadcast(spark.createDataFrame(
-      model.weights.zipWithIndex.map { case (w, b) => (b.toLong, w) }.toSeq)
-      .toDF("__b", "__w"))
-    val perDoc = bucketCounts(df, idCol, textCol, model.buckets)
-      .join(wdf, Seq("__b"))
-      .groupBy("id")
-      .agg(sum("n").as("n_grams"),
-        aggregate(
-          array_sort(collect_list(struct(col("__b").as("b"),
-            (col("n").cast("double") * col("__w")).as("c")))),
-          lit(0.0), (acc, x) => acc + x.getField("c")).as("__dot"))
-    df.select(col(idCol).as("id"))
-      .join(perDoc, Seq("id"), "left")
-      .withColumn("z",
-        lit(model.intercept) + coalesce(col("__dot"), lit(0.0)))
-      .select(col("id"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        col("z"),
-        (lit(1.0) / (lit(1.0) + exp(-col("z")))).as("score"))
   }
 
   /** Quality-filtered view: keep docs scoring >= `minScore`. */

@@ -779,32 +779,6 @@ object TextAnalysis {
         coalesce(col("__u.avg_logp"), lit(0.0)).as("avg_logp"))
   }
 
-  /** The pre-round-20 column formulation of [[unigramQuality]] — the
-    * value-parity reference the spec pins the map-only kernel against. */
-  private[graft] def unigramQualityColumns(
-      df: DataFrame, idCol: String, textCol: String,
-      vocabSize: Int): DataFrame = {
-    val counts = df
-      .select(explode(tokens(lower(col(textCol)))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c"))
-      .materializeOnce(eager = false) // two consumers: total + vocab
-    val total = counts.agg(coalesce(sum("c"), lit(0L))).head().getLong(0).toDouble
-    val vocab = counts.orderBy(desc("c"), asc("tok")).limit(vocabSize)
-    df.select(col(idCol).as("id"),
-        explode_outer(tokens(lower(col(textCol)))).as("tok"))
-      .join(broadcast(vocab), Seq("tok"), "left")
-      .withColumn("logp", log10(
-        (coalesce(col("c"), lit(0L)).cast("double") + lit(1.0)) /
-          lit(total + 1.0)))
-      .groupBy("id")
-      .agg(
-        count(col("tok")).as("n_tokens"),
-        // explode_outer keeps empty docs as one null-token row; they
-        // have no tokens to average, so their score is a neutral 0.0
-        coalesce(avg(when(col("tok").isNotNull, col("logp"))), lit(0.0))
-          .as("avg_logp"))
-  }
-
   /** Interpolated-bigram LM quality — the next tier of the [[
     * unigramQuality]] perplexity filter (CCNet interpolates up to
     * 5-grams; bigrams capture the word-order signal a unigram model is

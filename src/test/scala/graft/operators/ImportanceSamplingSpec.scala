@@ -90,7 +90,7 @@ class ImportanceSamplingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) ->
         (r.getAs[Int]("is_target"), r.getAs[Long]("n_grams"),
           r.getAs[Double]("weight"))).toMap
-    val legacy = ImportanceSampling.dsirWeightsColumns(tricky, "id", "text",
+    val legacy = ParityReferences.dsirWeightsColumns(tricky, "id", "text",
         col("tgt") === 1, B)
       .collect().map(r => r.getLong(0) ->
         (r.getAs[Int]("is_target"), r.getAs[Long]("n_grams"),

@@ -101,7 +101,7 @@ class QualityClassifierSpec extends SparkSpec {
     val fast = QualityClassifier.scoreWithMargin(tricky, "doc_id", "text", model)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getAs[Double]("z"), r.getAs[Double]("score"))).toMap
-    val legacy = QualityClassifier.scoreWithMarginColumns(
+    val legacy = ParityReferences.scoreWithMarginColumns(
       tricky, "doc_id", "text", model)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getAs[Double]("z"), r.getAs[Double]("score"))).toMap

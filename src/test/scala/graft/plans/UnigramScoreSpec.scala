@@ -21,7 +21,7 @@ class UnigramScoreSpec extends SparkSpec {
     val fast = graft.operators.TextAnalysis
       .unigramQuality(docs, "doc_id", "text", vocabSize = 4)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val legacy = graft.operators.TextAnalysis
+    val legacy = graft.operators.ParityReferences
       .unigramQualityColumns(docs, "doc_id", "text", vocabSize = 4)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(fast.keySet === legacy.keySet)
