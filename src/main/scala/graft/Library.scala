@@ -141,7 +141,6 @@ class Library(val spark: SparkSession, val warehouse: String,
     val shardedDead: Option[(Set[Long], Seq[Int])] =
       if (tableExists("embeddings_hnsw_sharded_meta") &&
           tableExists("embeddings_hnsw_sharded_ids")) {
-        ensureShardedIdsCells()
         val rows = spark.read
           .parquet(path("embeddings_hnsw_sharded_ids"))
           .join(broadcast(chunkT), Seq("chunkId"))
@@ -152,7 +151,6 @@ class Library(val spark: SparkSession, val warehouse: String,
     rewrite("embeddings", spark.read.parquet(path("embeddings"))
       .join(broadcast(chunkT), Seq("chunkId"), "left_anti"))
     if (tableExists("fts_postings")) {
-      migrateLegacyFtsLayout()
       val deadIds = chunkT.withColumnRenamed("chunkId", "id")
       rewriteFts(spark.read.parquet(path("fts_postings"))
         .join(broadcast(deadIds), Seq("id"), "left_anti"))
@@ -206,6 +204,9 @@ class Library(val spark: SparkSession, val warehouse: String,
     * scheme-qualified warehouse routes to its store. */
   private lazy val fs = graft.util.TableSwap.fileSystem(spark, warehouse)
 
+  // refuse a warehouse in any other format before touching it
+  graft.util.WarehouseFormat.open(fs, warehouse)
+
   private def tableExists(t: String) =
     fs.exists(new HPath(s"${path(t)}/_SUCCESS"))
 
@@ -214,13 +215,11 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   /** The snapshot searches read through: the pinned one while every
     * served table's commit marker is unchanged, else a new one (see
-    * [[ServingSnapshot]]). A postings layout from an older release is
-    * rebuilt here, once, before a snapshot serves from it. */
+    * [[ServingSnapshot]]). */
   private[graft] def serving(): ServingSnapshot = {
     val key = ServingSnapshot.probe(fs, warehouse)
     val cur = pinned.get
     if (cur != null && cur.key == key) cur
-    else if (migrateLegacyFtsLayout()) serving() // the rebuild moved the key
     else {
       val snap = new ServingSnapshot(spark, warehouse, key)
       pinned.set(snap)
@@ -372,23 +371,20 @@ class Library(val spark: SparkSession, val warehouse: String,
     * reference tars its WHOLE DB dir — parity means every table,
     * including the taxonomy tables that share this warehouse and are
     * not rebuildable, the cluster artifacts, and both persisted
-    * indexes; the IVF layout keeps its `__cell` hive partitioning). */
+    * indexes; the IVF layout keeps its `__cell` hive partitioning). The
+    * destination is stamped like any new warehouse.
+    *
+    * The sharded blob root is manifest-versioned (retention keeps the
+    * previous epoch's superseded leaves on disk), so it is not copied
+    * table by table: the handle pinned at the newest manifest is
+    * re-saved into the destination, which lands one epoch with its own
+    * build id on both the meta and the manifest. A tier that does not
+    * load (absent, or a torn save) is not exported at all — re-enable
+    * on the restored warehouse. */
   def exportTo(dest: String): Unit = {
-    migrateLegacyFtsLayout()
-    val partCols = Map("embeddings_ivf" -> "__cell", "fts_postings" -> "__tb",
-      "embeddings_hnsw_sharded" -> "__cell")
-    // the sharded blob root is manifest-versioned (retention keeps the
-    // previous epoch's superseded leaves on disk), so a plain
-    // recursive read would export duplicate (cell, sub) rows — and
-    // legacy hive leaves carry no __cell data column at all. Resolve
-    // through the manifest handle: the export lands as a single-epoch
-    // hive layout the restored warehouse reads via the spec-pinned
-    // legacy-migration path. The build-id stamp is dropped with the
-    // manifest (it pairs ONE save's meta with ONE root; the export is
-    // a new pair). A tier that does not load (absent, or a torn save)
-    // is not exported at all — re-enable on the restored warehouse.
-    val shardedTier = Set("embeddings_hnsw_sharded",
-      "embeddings_hnsw_sharded_meta", "embeddings_hnsw_sharded_ids")
+    graft.util.WarehouseFormat.open(
+      graft.util.TableSwap.fileSystem(spark, dest), dest)
+    val partCols = Map("embeddings_ivf" -> "__cell", "fts_postings" -> "__tb")
     // re-pin at the NEWEST committed manifest for the export (round-19
     // self-review): a session-cached handle can trail out-of-band
     // maintenance — exporting its older snapshot next to fresh direct
@@ -396,17 +392,14 @@ class Library(val spark: SparkSession, val warehouse: String,
     // (or fail on a GC'd epoch two commits behind)
     shardedCache = None
     val shardedHandle = loadSharded()
+    shardedHandle.foreach(sh => graft.operators.ShardedHnsw.save(sh,
+      s"$dest/embeddings_hnsw_sharded", s"$dest/embeddings_hnsw_sharded_meta"))
     Library.AllTables.filter(tableExists)
-      .filterNot(t => shardedTier(t) && shardedHandle.isEmpty)
+      .filterNot(t => t == "embeddings_hnsw_sharded" ||
+        t == "embeddings_hnsw_sharded_meta" ||
+        (t == "embeddings_hnsw_sharded_ids" && shardedHandle.isEmpty))
       .foreach { t =>
-        val df = t match {
-          case "embeddings_hnsw_sharded" => shardedHandle.get.table
-          case "embeddings_hnsw_sharded_meta" =>
-            val m = spark.read.parquet(path(t))
-            if (m.columns.contains("__buildid")) m.drop("__buildid") else m
-          case _ => spark.read.parquet(path(t))
-        }
-        val w = df.write.mode(SaveMode.Overwrite)
+        val w = spark.read.parquet(path(t)).write.mode(SaveMode.Overwrite)
         partCols.get(t).map(w.partitionBy(_)).getOrElse(w)
           .parquet(s"$dest/$t")
       }
@@ -491,19 +484,11 @@ class Library(val spark: SparkSession, val warehouse: String,
       .filter(col("__cell") === DeltaCell).count()
     if (delta >= ivfCompactMinRows) {
       val meta = spark.read.parquet(path("embeddings_ivf_meta"))
-      val indexed =
-        if (meta.columns.contains("indexedRows"))
-          meta.select("indexedRows").head().getLong(0)
-        else // pre-indexedRows meta: embeddings holds indexed + delta rows
-          math.max(0L, embeddings.count() - delta)
+      val head = meta.select("indexedRows", "nProbe", "builtRows").head()
+      val indexed = head.getLong(0)
       if (delta > ivfCompactFraction * indexed) {
-        val nProbe = meta.select("nProbe").head().getInt(0)
-        val builtRows = // pre-builtRows meta: treat current size as fitted size
-          if (meta.columns.contains("builtRows"))
-            meta.select("builtRows").head().getLong(0)
-          else indexed
-        if (indexed + delta > ivfRefitFactor * math.max(builtRows, 1L))
-          buildVectorIndex(meta.count().toInt, nProbe)
+        if (indexed + delta > ivfRefitFactor * math.max(head.getLong(2), 1L))
+          buildVectorIndex(meta.count().toInt, head.getInt(1))
         else foldDeltaIntoCells(delta, indexed)
       }
     }
@@ -535,20 +520,19 @@ class Library(val spark: SparkSession, val warehouse: String,
     graft.util.TableSwap.delete(fs,
       new HPath(path(s"embeddings_ivf/__cell=$DeltaCell")))
     recommit("embeddings_ivf")
-    val builtRows =
-      if (meta.columns.contains("builtRows")) col("builtRows")
-      else lit(indexed) // legacy meta: current size was the fitted size
     graft.util.TableSwap.rewrite(path("embeddings_ivf_meta"),
-      meta.withColumn("indexedRows", lit(indexed + deltaRows))
-        .withColumn("builtRows", builtRows))
+      meta.withColumn("indexedRows", lit(indexed + deltaRows)))
   }
 
   /** Exact vector top-k over chunks (J1 three-way join shape): score all
     * embeddings (or just the probed IVF cells when an index is built),
     * TakeOrdered k, then join chunk content and broadcast document
     * metadata. Tag/threshold filters push below the top-k. */
-  def vectorSearch(queryVec: Array[Float], opts: SearchOptions): DataFrame = {
-    val snap = serving()
+  def vectorSearch(queryVec: Array[Float], opts: SearchOptions): DataFrame =
+    vectorSearch(serving(), queryVec, opts)
+
+  private def vectorSearch(snap: ServingSnapshot, queryVec: Array[Float],
+                           opts: SearchOptions): DataFrame = {
     val ch = snap.chunks
     val docs = snap.docsTagged(opts.tags)
       .select(col("id").as("docId"), col("title"))
@@ -705,37 +689,12 @@ class Library(val spark: SparkSession, val warehouse: String,
       .parquet(path("knn_edges_meta"))
 
   /** The persisted edge config: (k, edgeSource, nCells, nProbe,
-    * srpDim, policy). Pre-round-19 meta tables carry only k → the
-    * exact source they were built with (noted once on stderr so old
-    * warehouses get routed toward the bounded facade); round-19 meta
-    * carries no policy column → the persisted source doubles as the
-    * policy (exactly the enable-time pin those warehouses were built
-    * with; the growth warning below still covers them). */
+    * srpDim, policy). */
   private def knnEdgesConfig(): (Int, String, Int, Int, Int, String) = {
-    val df = spark.read.parquet(path("knn_edges_meta"))
-    val r = df.head()
-    val k = r.getInt(r.fieldIndex("k"))
-    if (df.columns.contains("edgeSource")) {
-      val src = r.getString(r.fieldIndex("edgeSource"))
-      val policy =
-        if (df.columns.contains("policy"))
-          r.getString(r.fieldIndex("policy"))
-        else src
-      (k, src, r.getInt(r.fieldIndex("nCells")),
-        r.getInt(r.fieldIndex("nProbe")),
-        r.getInt(r.fieldIndex("srpDim")), policy)
-    } else {
-      if (!legacyEdgeMetaNoticed) {
-        legacyEdgeMetaNoticed = true
-        System.err.println(
-          "graft: legacy knn_edges_meta (k only) reads as the exact " +
-            "edge source; re-run enableKnnEdges to choose a bounded one")
-      }
-      (k, "exact", 16, 16, 0, "exact")
-    }
+    val r = spark.read.parquet(path("knn_edges_meta")).head()
+    (r.getAs[Int]("k"), r.getAs[String]("edgeSource"), r.getAs[Int]("nCells"),
+      r.getAs[Int]("nProbe"), r.getAs[Int]("srpDim"), r.getAs[String]("policy"))
   }
-
-  private var legacyEdgeMetaNoticed = false
 
   /** The edge config to RUN with right now: re-resolves an `"auto"`
     * policy against the current corpus count (persisting a flip so
@@ -865,31 +824,11 @@ class Library(val spark: SparkSession, val warehouse: String,
     // #3) so compaction can route to its leaves without vectors —
     // read from the just-built blobs, so it cannot drift from them
     graft.util.TableSwap.rewrite(path("embeddings_hnsw_sharded_ids"),
-      shardedIdsFrame(sh, emb.select("chunkId")))
+      graft.operators.ShardedHnsw.memberCells(sh)
+        .join(emb.select(xxhash64(col("chunkId")).as("id"), col("chunkId")),
+          Seq("id"))
+        .select("chunkId", "__cell"))
     shardedCache = None
-  }
-
-  /** The cell-carrying ids frame for tier `sh`: each chunkId joined to
-    * its member's assigned cell AS READ FROM THE BLOBS (memberCells),
-    * so the recorded cells can never drift from where the vectors
-    * actually live. One definition for the build-time write and the
-    * pre-round-18 migration. */
-  private def shardedIdsFrame(sh: graft.operators.ShardedHnsw.Shards,
-                              chunkIds: DataFrame): DataFrame =
-    graft.operators.ShardedHnsw.memberCells(sh)
-      .join(chunkIds.select(xxhash64(col("chunkId")).as("id"),
-        col("chunkId")), Seq("id"))
-      .select("chunkId", "__cell")
-
-  /** One-time migration of a pre-round-18 ids table (chunkId only) to
-    * the cell-carrying form: the blobs know every member's cell — one
-    * scan recovers it, and from then on compaction is O(touched). */
-  private def ensureShardedIdsCells(): Unit = {
-    val ids = spark.read.parquet(path("embeddings_hnsw_sharded_ids"))
-    if (!ids.columns.contains("__cell")) loadSharded().foreach { sh =>
-      rewrite("embeddings_hnsw_sharded_ids",
-        shardedIdsFrame(sh, ids.select("chunkId")))
-    }
   }
 
   /** Ingest-time maintenance of the persisted sharded tier: the batch
@@ -908,7 +847,6 @@ class Library(val spark: SparkSession, val warehouse: String,
     if (tableExists("embeddings_hnsw_sharded_meta") &&
         tableExists("embeddings_hnsw_sharded") &&
         tableExists("embeddings_hnsw_sharded_ids")) {
-      ensureShardedIdsCells()
       val known = spark.read.parquet(path("embeddings_hnsw_sharded_ids"))
         .select(col("chunkId"), lit(1).as("__known"))
       // ONE job over the batch: the left join marks recurring chunkIds
@@ -990,8 +928,8 @@ class Library(val spark: SparkSession, val warehouse: String,
     *     corpus fraction — PER QUERY, so a balanced tier pays exactly
     *     the spec-pinned ⌈2·√nCells⌉ cells while a skewed tier probes
     *     where the mass is (fewer cells when the nearest cell
-    *     dominates, more amid tiny ones). Unknown-count handles
-    *     (in-memory, legacy) pay the fixed ⌈2·√nCells⌉ count. Either
+    *     dominates, more amid tiny ones). In-memory handles carry no
+    *     counts and pay the fixed ⌈2·√nCells⌉ count. Either
     *     way per-query cost scales with √index, not index; recall
     *     ≥ 0.99 on clustered corpora is spec-pinned at BOTH policies
     *     (`ShardedHnswSpec`). `spark.graft.servingProbeMass`
@@ -1011,8 +949,13 @@ class Library(val spark: SparkSession, val warehouse: String,
     * r18 #7). */
   def shardedSearch(queryVec: Array[Float], opts: SearchOptions,
                     nProbe: Int = -1, ef: Int = 64): DataFrame =
+    shardedSearch(serving(), queryVec, opts, nProbe, ef)
+
+  private def shardedSearch(snap: ServingSnapshot, queryVec: Array[Float],
+                            opts: SearchOptions, nProbe: Int,
+                            ef: Int): DataFrame =
     loadSharded() match {
-      case None => vectorSearch(queryVec, opts)
+      case None => vectorSearch(snap, queryVec, opts)
       case Some(sh) =>
         val k = math.max(opts.limit * 2, 16)
         val nCells = sh.centers.length
@@ -1033,7 +976,7 @@ class Library(val spark: SparkSession, val warehouse: String,
             // 0 → mass policy off (the fixed √n count); (0,1] → that
             // fraction; > 1 → clamped to 1.0 with a loud note
             // (ADVICE r19 — '1.5' used to silently mean OFF).
-            // In-memory / legacy tiers have no counts → the √n count.
+            // In-memory tiers have no counts → the √n count.
             val auto = Library.autoProbe(spark, nCells)
             val massConf = spark.conf
               .get("spark.graft.servingProbeMass", "")
@@ -1083,7 +1026,7 @@ class Library(val spark: SparkSession, val warehouse: String,
                   // clamp: an out-of-band REBUILD may have fewer cells
                   // than the budget computed against the stale handle
                   runOnce(sh2, math.min(np, sh2.centers.length))
-                case None => return vectorSearch(queryVec, opts)
+                case None => return vectorSearch(snap, queryVec, opts)
               }
           }
         val scored = hitRows.toSeq.toDF("id", "cos_dist")
@@ -1094,7 +1037,6 @@ class Library(val spark: SparkSession, val warehouse: String,
         // point is sublinear serving, and a wide-vector corpus scan
         // for id mapping would defeat it (the ids table is ~16x
         // narrower than embeddings at dim 64, more at real dims)
-        val snap = serving()
         rankAnnHits(snap,
           scored.join(snap.shardedIds, Seq("id")).select("chunkId", "score"),
           opts)
@@ -1268,15 +1210,20 @@ class Library(val spark: SparkSession, val warehouse: String,
     * join — `ef` over-fetches so k survivors remain. Falls back to
     * [[vectorSearch]] when no HNSW index exists. */
   def hnswSearch(queryVec: Array[Float], opts: SearchOptions,
-                 ef: Int = 64): DataFrame = loadHnsw() match {
-    case None => vectorSearch(queryVec, opts)
-    case Some((g, cids)) =>
-      val hits = graft.operators.Hnsw
-        .searchKnn(g, queryVec, math.max(opts.limit * 2, 16),
-          math.max(ef, opts.limit * 2))
-        .map { case (sid, d) => (cids(sid.toInt), 1.0 - d / 2.0) }
-      rankAnnHits(serving(), hits.toSeq.toDF("chunkId", "score"), opts)
-  }
+                 ef: Int = 64): DataFrame =
+    hnswSearch(serving(), queryVec, opts, ef)
+
+  private def hnswSearch(snap: ServingSnapshot, queryVec: Array[Float],
+                         opts: SearchOptions, ef: Int): DataFrame =
+    loadHnsw() match {
+      case None => vectorSearch(snap, queryVec, opts)
+      case Some((g, cids)) =>
+        val hits = graft.operators.Hnsw
+          .searchKnn(g, queryVec, math.max(opts.limit * 2, 16),
+            math.max(ef, opts.limit * 2))
+          .map { case (sid, d) => (cids(sid.toInt), 1.0 - d / 2.0) }
+        rankAnnHits(snap, hits.toSeq.toDF("chunkId", "score"), opts)
+    }
 
   /** Serving auto-dispatch (VERDICT r17 #8): route a vector query to
     * the best enabled ANN tier — the persisted sharded tier when
@@ -1293,12 +1240,15 @@ class Library(val spark: SparkSession, val warehouse: String,
     * see [[shardedSearch]]. The other tiers ignore `nProbe`; `ef` also
     * reaches [[hnswSearch]]. */
   def annSearch(queryVec: Array[Float], opts: SearchOptions,
-                nProbe: Int = -1, ef: Int = 64): DataFrame = {
-    val snap = serving()
-    if (snap.shardedTier) shardedSearch(queryVec, opts, nProbe, ef)
-    else if (snap.hnswTier) hnswSearch(queryVec, opts, ef)
-    else vectorSearch(queryVec, opts)
-  }
+                nProbe: Int = -1, ef: Int = 64): DataFrame =
+    annSearch(serving(), queryVec, opts, nProbe, ef)
+
+  private def annSearch(snap: ServingSnapshot, queryVec: Array[Float],
+                        opts: SearchOptions, nProbe: Int,
+                        ef: Int): DataFrame =
+    if (snap.shardedTier) shardedSearch(snap, queryVec, opts, nProbe, ef)
+    else if (snap.hnswTier) hnswSearch(snap, queryVec, opts, ef)
+    else vectorSearch(snap, queryVec, opts)
 
   /** Shared tail of the graph-ANN serving paths ([[hnswSearch]],
     * [[shardedSearch]]): shape a (chunkId, score) candidate frame into
@@ -1377,28 +1327,6 @@ class Library(val spark: SparkSession, val warehouse: String,
       .drop("__tb")
   }
 
-  /** A warehouse written before term-bucketing has flat (id, term, tf)
-    * postings; one written before doclen denormalization lacks the
-    * `doclen` postings column and the `fts_stats` table. Every current
-    * code path (probe filter, bucketed append, partitioned rewrite/
-    * export, denormalized scoring) assumes the current layout, and an
-    * append in the new shape NEXT TO old files would produce a mixed
-    * directory Spark cannot read consistently. One rebuild from the
-    * chunks table upgrades the layout in place; detection is a schema
-    * peek, no data read. Returns true iff a rebuild ran — callers that
-    * were about to append a batch already present in `chunks` (ingest
-    * writes chunks first) must skip their append, or the rebuild's
-    * full-corpus pass plus the append double-counts the batch. */
-  private def migrateLegacyFtsLayout(): Boolean = {
-    val stale = tableExists("fts_postings") && {
-      val cols = spark.read.parquet(path("fts_postings")).columns
-      !cols.contains("__tb") || !cols.contains("doclen") ||
-        !tableExists("fts_stats")
-    }
-    if (stale) rebuildFtsIndex()
-    stale
-  }
-
   /** Cell-scoped index maintenance on delete: rewrite ONLY the cell
     * partitions that contain dead vectors, leaving the centroids and
     * every other closed cell file untouched. Removing rows never
@@ -1457,35 +1385,31 @@ class Library(val spark: SparkSession, val warehouse: String,
         // a delta-only delete decrements nothing — skip the meta swap
         if (removedIndexed > 0) {
           val meta = spark.read.parquet(path("embeddings_ivf_meta"))
-          if (meta.columns.contains("indexedRows"))
-            graft.util.TableSwap.rewrite(path("embeddings_ivf_meta"),
-              meta.withColumn("indexedRows",
-                greatest(col("indexedRows") - lit(removedIndexed), lit(0L))))
+          graft.util.TableSwap.rewrite(path("embeddings_ivf_meta"),
+            meta.withColumn("indexedRows",
+              greatest(col("indexedRows") - lit(removedIndexed), lit(0L))))
         }
       }
     }
 
   private def appendToFtsIndex(newChunks: DataFrame): Unit =
     if (tableExists("fts_postings")) {
-      // a migration rebuild runs over the chunks table, which ALREADY
-      // holds this batch (ingest writes chunks before indexing) — the
-      // rebuild indexed it, so appending again would duplicate its
-      // postings/lens rows and double-count fts_stats
-      if (!migrateLegacyFtsLayout()) {
-        writeFtsPostings(Bm25.postingsWithLen(newChunks, "id", "content"),
-          SaveMode.Append)
-        val batchLens = Bm25.docLengths(newChunks, "id", "content")
-          .materializeOnce(eager = false) // written twice: lens + stats row
-        batchLens.write.mode(SaveMode.Append).parquet(path("fts_lens"))
-        writeFtsStats(batchLens, SaveMode.Append)
-      }
+      writeFtsPostings(Bm25.postingsWithLen(newChunks, "id", "content"),
+        SaveMode.Append)
+      val batchLens = Bm25.docLengths(newChunks, "id", "content")
+        .materializeOnce(eager = false) // written twice: lens + stats row
+      batchLens.write.mode(SaveMode.Append).parquet(path("fts_lens"))
+      writeFtsStats(batchLens, SaveMode.Append)
     }
 
   /** BM25 full-text search over chunk contents (J2/K4 shape). Uses the
     * persisted index when present (probe = pruned scan of the postings
     * slice), falling back to an on-the-fly index over the chunk scan. */
-  def ftsSearch(query: String, opts: SearchOptions): DataFrame = {
-    val snap = serving()
+  def ftsSearch(query: String, opts: SearchOptions): DataFrame =
+    ftsSearch(serving(), query, opts)
+
+  private def ftsSearch(snap: ServingSnapshot, query: String,
+                        opts: SearchOptions): DataFrame = {
     val ch = snap.chunks
     val docs = snap.docsTagged(opts.tags)
       .select(col("id").as("docId"), col("title"))
@@ -1527,9 +1451,11 @@ class Library(val spark: SparkSession, val warehouse: String,
   /** Hybrid search — the flagship path (reference §3.1): vector ∪ fts,
     * fused on (docId, page, chunkIndex) with the 1.2× both-sources boost,
     * final ranked top-k. The FTS score is intentionally unnormalized
-    * against the [0,1] vector score (reference quirk, preserved). */
+    * against the [0,1] vector score (reference quirk, preserved). Both
+    * legs and the context expansion read one snapshot. */
   def search(query: String, opts: SearchOptions = SearchOptions()): DataFrame = {
-    val vec = annSearch(embedder.embed(query), opts)
+    val snap = serving()
+    val vec = annSearch(snap, embedder.embed(query), opts, nProbe = -1, ef = 64)
       .select(col("docId"), col("page"), col("chunkIndex"),
         col("title").as("v_title"), col("content").as("v_content"),
         col("score"))
@@ -1541,7 +1467,7 @@ class Library(val spark: SparkSession, val warehouse: String,
       else {
         // fts rows carry their own title/content: an fts-only hit must
         // arrive complete (reference appends fts results whole)
-        val fts = ftsSearch(query, opts)
+        val fts = ftsSearch(snap, query, opts)
           .select(col("docId"), col("page"), col("chunkIndex"),
             col("title").as("f_title"), col("content").as("f_content"),
             col("score"))
@@ -1559,8 +1485,8 @@ class Library(val spark: SparkSession, val warehouse: String,
       case None => ranked
       case Some(maxChars) =>
         val hits = ranked.materializeOnce() // small: top-k rows
-        val expanded = expandContext(
-          hits.select(col("docId"), col("chunkIndex")), maxChars)
+        val expanded = expandContext(snap,
+          hits.select(col("docId"), col("chunkIndex")), maxChars, window = 32)
           .select(col("doc").as("docId"), col("hit_idx").as("chunkIndex"),
             col("context"), col("start_index"), col("end_index"))
         hits.drop("content")
@@ -1576,7 +1502,11 @@ class Library(val spark: SparkSession, val warehouse: String,
     * with MinChunkChars ~20 a 600-char budget can admit ~30 chunks, so
     * the candidate window must not bind before the budget does. */
   def expandContext(hits: DataFrame, maxChars: Int, window: Int = 32): DataFrame =
-    ContextExpansion.expand(hits, serving().chunks, "docId", "chunkIndex",
+    expandContext(serving(), hits, maxChars, window)
+
+  private def expandContext(snap: ServingSnapshot, hits: DataFrame,
+                            maxChars: Int, window: Int): DataFrame =
+    ContextExpansion.expand(hits, snap.chunks, "docId", "chunkIndex",
       "content", window, maxChars)
 
   // ------------------------------------------------------- RAPTOR (M1-M7)
@@ -1633,8 +1563,9 @@ class Library(val spark: SparkSession, val warehouse: String,
     * chunkIndex=clusterId) (LibSQLDatabase.ts:224-322). */
   def multiScaleSearch(query: String, opts: SearchOptions = SearchOptions()): DataFrame = {
     val qv = embedder.embed(query)
-    val chunkHits = vectorSearch(qv, opts)
-    val summaryScored = serving().clusterSummaries
+    val snap = serving()
+    val chunkHits = vectorSearch(snap, qv, opts)
+    val summaryScored = snap.clusterSummaries
       .withColumn("score",
         VectorFunctions.distToScore(lit(1.0) -
           graft.plans.CosineSimilarity(col("embedding"),
@@ -1687,7 +1618,6 @@ class Library(val spark: SparkSession, val warehouse: String,
     rewrite("embeddings",
       embeddings.join(deadChunks, Seq("chunkId"), "left_anti"))
     if (tableExists("fts_postings")) {
-      migrateLegacyFtsLayout()
       rewriteFts(spark.read.parquet(path("fts_postings"))
         .join(deadChunks.withColumnRenamed("chunkId", "id"), Seq("id"), "left_anti"))
       rewrite("fts_lens", spark.read.parquet(path("fts_lens"))
@@ -1737,18 +1667,16 @@ class Library(val spark: SparkSession, val warehouse: String,
     // bulk cell swap (removeFromVectorIndex): restore-then-clear, shared
     // with the start of every new bulk swap
     restoreStrandedCellSwap()
-    // per-leaf scratch: the delta-retire swap and the legacy (pre-bulk)
-    // per-cell swap both keep scratch at the root with the cell in the name
-    val CellScratch = "embeddings_ivf_(?:cell(-?\\d+)|(delta))_(?:tmp|old)".r
-    val scratch = fs.listStatus(new HPath(warehouse)).map(_.getPath)
-      .filter(p => CellScratch.pattern.matcher(p.getName).matches())
-    scratch.filter(_.getName.endsWith("_old")).foreach { old =>
-      val cell = CellScratch.findFirstMatchIn(old.getName).get
-      val n = Option(cell.group(1)).getOrElse(DeltaCell.toString)
-      restoreIfMissing(new HPath(path(s"embeddings_ivf/__cell=$n")), old)
+    // the delta-leaf swap (retireFoldDuplicates) keeps its scratch at
+    // the root, outside the table
+    val deltaOld = new HPath(path("embeddings_ivf_delta_old"))
+    if (fs.exists(deltaOld)) {
+      restoreIfMissing(new HPath(path(s"embeddings_ivf/__cell=$DeltaCell")),
+        deltaOld)
+      recommit("embeddings_ivf")
     }
-    if (scratch.exists(_.getName.endsWith("_old"))) recommit("embeddings_ivf")
-    scratch.foreach(graft.util.TableSwap.delete(fs, _))
+    Seq(deltaOld, new HPath(path("embeddings_ivf_delta_tmp")))
+      .foreach(graft.util.TableSwap.delete(fs, _))
     // sharded-HNSW single-leaf swaps keep the same cell-in-the-name
     // scratch convention; the tier's writer owns the heal logic
     graft.operators.ShardedHnsw.repairLeaves(spark,
@@ -1817,7 +1745,6 @@ class Library(val spark: SparkSession, val warehouse: String,
     if (nOC > 0) {
       val live = chunks.select(col("id"))
       if (tableExists("fts_postings")) {
-        migrateLegacyFtsLayout()
         rewriteFts(spark.read.parquet(path("fts_postings"))
           .join(live, Seq("id"), "left_semi"))
         rewrite("fts_lens", spark.read.parquet(path("fts_lens"))
@@ -1873,10 +1800,7 @@ class Library(val spark: SparkSession, val warehouse: String,
   private def rewrite(table: String, df: DataFrame): Unit =
     graft.util.TableSwap.rewrite(path(table), df)
 
-  /** Postings rewrites must keep the term-bucketed hive layout. Callers
-    * pass a plan over the CURRENT table, so the legacy migration (which
-    * swaps the table out underneath) cannot run here — both call sites
-    * re-derive their input after migrating. */
+  /** Postings rewrites must keep the term-bucketed hive layout. */
   private def rewriteFts(df: DataFrame): Unit =
     graft.util.TableSwap.rewrite(path("fts_postings"),
       df.repartition(col("__tb")).sortWithinPartitions("term", "id"),

@@ -23,6 +23,7 @@ class TaxonomyStore(val spark: SparkSession, val warehouse: String,
   // same FileSystem routing as Library.tableExists: the warehouse may
   // live on any Hadoop-supported store, not just the local disk
   private lazy val fs = graft.util.TableSwap.fileSystem(spark, warehouse)
+  graft.util.WarehouseFormat.open(fs, warehouse)
   private def exists(t: String) =
     fs.exists(new org.apache.hadoop.fs.Path(s"${path(t)}/_SUCCESS"))
   private def emptyDf(schema: String): DataFrame =

@@ -198,11 +198,4 @@ object Bm25 {
     val avgdl = if (n > 0) totalLen.toDouble / n.toDouble else 1.0
     scoreAllDenorm(termSlice(post, terms).join(lens, "id"), n, avgdl)
   }
-
-  /** Ranked top-k over prebuilt index tables. */
-  def scoreFromIndex(post: DataFrame, lens: DataFrame,
-                     terms: Seq[String], k: Int): DataFrame =
-    scoreAllFromIndex(post, lens, terms)
-      .orderBy(desc("bm25"), asc("id"))
-      .limit(k)
 }

@@ -73,15 +73,12 @@ import org.apache.spark.sql.functions._
   * discipline. Crash anywhere before the manifest rename leaves only
   * unreferenced orphan dirs ([[repairLeaves]] sweeps them, with an
   * mtime staleness guard so a sweep can never destroy a LIVE writer's
-  * in-flight scratch — ADVICE r17). Pre-manifest warehouses (round-17
-  * hive `__cell=N` layout) read through a synthesized epoch-0 manifest
-  * and migrate leaf-by-leaf as maintenance touches them.
+  * in-flight scratch — ADVICE r17).
   *
   * Blob codec (round 18, VERDICT r17 #2): subgraphs serialize in a
   * primitive-array layout (header, ids, levels, packed vectors,
-  * CSR-offset adjacency per layer) — no Java object-stream overhead;
-  * legacy `ObjectOutputStream` blobs still deserialize (magic-number
-  * dispatch). Serving decodes through a content-keyed per-JVM LRU
+  * CSR-offset adjacency per layer) — no Java object-stream overhead.
+  * Serving decodes through a content-keyed per-JVM LRU
   * ([[deserializeCached]]) so a hot shard deserializes once per
   * executor, not once per trigger/task.
   *
@@ -143,18 +140,16 @@ object ShardedHnsw {
 
   // ------------------------------------------------------------------ codec
 
-  /** v2 blob magic ("GSH2" — graft sharded hnsw, layout 2). Java
-    * serialization streams begin 0xACED0005, so the first int
-    * dispatches the decoder unambiguously. */
+  /** v2 blob magic ("GSH2" — graft sharded hnsw, layout 2). */
   private val Magic = 0x47534832
 
   /** Primitive-array graph codec (VERDICT r17 #2): header (magic, n,
     * dim, entryPoint, m, efC, nLayers, seed), then ids, levels, packed
     * row-major vectors, then per layer a CSR adjacency (n+1 offsets +
     * flat neighbor ids). Smaller than the Java object stream (the
-    * per-node array headers go away — Round18Bench records the
-    * measured delta) and, the real win, decodes in bulk-copy time
-    * with no reflection, no boxing, no class resolution. */
+    * per-node array headers go away) and, the real win, decodes in
+    * bulk-copy time with no reflection, no boxing, no class
+    * resolution. */
   private[graft] def serialize(g: Hnsw.Graph): Array[Byte] = {
     val n = g.size
     val dim = if (n == 0) 0 else g.vecs(0).length
@@ -196,13 +191,8 @@ object ShardedHnsw {
 
   private[graft] def deserialize(bytes: Array[Byte]): Hnsw.Graph = {
     val buf = java.nio.ByteBuffer.wrap(bytes)
-    if (bytes.length < 4 || buf.getInt(0) != Magic) { // legacy blob
-      val ois = new java.io.ObjectInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val g = ois.readObject().asInstanceOf[Hnsw.Graph]
-      ois.close(); return g
-    }
-    buf.getInt() // magic
+    require(bytes.length >= 4 && buf.getInt() == Magic,
+      "not a shard blob: missing the GSH2 magic")
     val n = buf.getInt(); val dim = buf.getInt()
     val entry = buf.getInt(); val m = buf.getInt()
     val efc = buf.getInt(); val layers = buf.getInt()
@@ -239,14 +229,10 @@ object ShardedHnsw {
       efConstruction = efc, seed = seed)
   }
 
-  /** Member count of a blob without materializing the graph: a header
-    * peek for v2 blobs; legacy Java blobs pay a full decode (they
-    * rewrite in v2 the first time maintenance touches their leaf). */
-  private def peekSize(bytes: Array[Byte]): Int = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    if (bytes.length >= 8 && buf.getInt(0) == Magic) buf.getInt(4)
-    else deserialize(bytes).size
-  }
+  /** Member count of a blob without materializing the graph: a
+    * header peek. */
+  private def peekSize(bytes: Array[Byte]): Int =
+    java.nio.ByteBuffer.wrap(bytes).getInt(4)
 
   /** Per-JVM content-keyed LRU over decoded shards (VERDICT r17 #2):
     * serving paths decode a blob at most once per executor process —
@@ -330,8 +316,7 @@ object ShardedHnsw {
   /** (member id, assigned cell) for every indexed member, read from
     * the blobs themselves — what the warehouse ids table records so
     * compaction can route to a dead member's leaves without its
-    * vector (VERDICT r17 #3); also the one-time migration read for
-    * pre-round-18 ids tables that lack the cell column. */
+    * vector (VERDICT r17 #3). */
   def memberCells(sh: Shards): DataFrame = {
     val spark = sh.table.sparkSession
     import spark.implicits._
@@ -547,15 +532,14 @@ object ShardedHnsw {
     * probes one or two cells; a query ranked against many tiny cells
     * probes more. Counts come free from the pinned manifest's leaf
     * entries (loaded handles only) — returns None for in-memory
-    * handles or when any count is the legacy unknown (−1), and the
-    * caller falls back to the √n default. */
+    * handles, and the caller falls back to the √n default. */
   private[graft] def probeCountByMass(sh: Shards, qv: Array[Float],
                                       massFrac: Double): Option[Int] =
     Option(sh.source).flatten.flatMap { case (_, manifest) =>
       val counts = sh.centers.indices.map(c =>
         manifest.leaves.get(c).map(_.count).getOrElse(0L))
       val total = counts.sum
-      if (counts.exists(_ < 0) || total <= 0) None
+      if (total <= 0) None
       else {
         val order = probeCells(sh, qv, sh.centers.length)
         val want = massFrac * total
@@ -727,15 +711,8 @@ object ShardedHnsw {
     val subsOf = rows.map(r => r.getInt(0) -> r.getInt(2))
       .filter(_._2 > 1).toMap
     val h = rows.head
-    def optField(name: String): Boolean =
-      h.schema != null && h.schema.fieldNames.contains(name)
-    // pre-round-18 meta tables lack __maxcell → 0 (no watermark)
-    val maxCell = if (optField("__maxcell")) h.getInt(h.fieldIndex("__maxcell")) else 0
-    val buildId =
-      if (optField("__buildid")) Option(h.getString(h.fieldIndex("__buildid")))
-      else None
     MetaInfo(centers, subsOf, h.getInt(3), h.getInt(4), h.getLong(5),
-      maxCell, buildId)
+      h.getAs[Int]("__maxcell"), Option(h.getAs[String]("__buildid")))
   }
 
   private def readMeta(spark: SparkSession, metaPath: String): MetaInfo =
@@ -748,18 +725,10 @@ object ShardedHnsw {
     * using the NEW meta's centers — wasted, mixed-build writes the
     * refusing load then strands forever). */
   private def requirePaired(mi: MetaInfo, manifest: Manifest): Unit =
-    (mi.buildId, manifest.buildId) match {
-      case (Some(a), Some(b)) if a != b =>
-        throw new TornTierException(
-          s"sharded tier build mismatch: meta=$a blobs=$b (torn save)")
-      case (Some(a), None) =>
-        // a buildId-stamped meta can only legitimately pair with a
-        // buildId-stamped manifest (exports strip the stamp): this is
-        // the new meta + old root state of a torn save
-        throw new TornTierException(
-          s"sharded tier build mismatch: meta=$a blobs=<none> (torn save)")
-      case _ => ()
-    }
+    if (mi.buildId.isEmpty || mi.buildId != manifest.buildId)
+      throw new TornTierException("sharded tier build mismatch: meta=" +
+        s"${mi.buildId.getOrElse("<none>")} blobs=" +
+        s"${manifest.buildId.getOrElse("<none>")} (torn save)")
 
   /** The handle's meta table as a frame — the persisted companion form
     * the stamp-keyed artifact store uses (`GraphRank`'s hnsw-sharded
@@ -781,10 +750,9 @@ object ShardedHnsw {
   // ----------------------------------------------------- manifest machinery
 
   /** One committed leaf: its directory name under the root, its member
-    * count (−1 = unknown, a migrated legacy leaf not yet touched), and
-    * its sub-shard fan. The fan rides HERE (not only in the meta
-    * table) so a watermark-grown fan commits atomically with the leaf
-    * it re-sharded — a reader can never pair an old fan with a new
+    * count, and its sub-shard fan. The fan rides HERE (not only in the
+    * meta table) so a watermark-grown fan commits atomically with the
+    * leaf it re-sharded — a reader can never pair an old fan with a new
     * leaf or vice versa. */
   private[operators] final case class LeafEntry(dir: String, count: Long,
                                                 fan: Int)
@@ -825,11 +793,7 @@ object ShardedHnsw {
   private[operators] final case class Manifest(
       epoch: Long, leaves: Map[Int, LeafEntry],
       buildId: Option[String] = None,
-      drift: Option[DriftState] = None) {
-    def fanOf(cell: Int, metaFallback: Map[Int, Int]): Int =
-      leaves.get(cell).map(_.fan)
-        .getOrElse(metaFallback.getOrElse(cell, 1))
-  }
+      drift: Option[DriftState] = None)
 
   private def manifestDir(root: String) = s"$root/_manifest"
 
@@ -872,13 +836,10 @@ object ShardedHnsw {
     Manifest(epoch, leaves, buildId, drift)
   }
 
-  /** The newest committed manifest, or a synthesized epoch-0 manifest
-    * over a pre-manifest hive layout (`__cell=N` leaf dirs; fans from
-    * the meta table, counts unknown), or an empty epoch-0 manifest for
-    * a tier with no leaves at all. */
-  private[operators] def currentManifest(
-      spark: SparkSession, shardsPath: String,
-      metaFans: Map[Int, Int]): Manifest = {
+  /** The newest committed manifest, or an empty epoch-0 manifest for a
+    * root with none. */
+  private[operators] def currentManifest(spark: SparkSession,
+                                         shardsPath: String): Manifest = {
     val fs = graft.util.TableSwap.fileSystem(spark, shardsPath)
     val mdir = new HPath(manifestDir(shardsPath))
     val committed =
@@ -886,19 +847,8 @@ object ShardedHnsw {
       else fs.listStatus(mdir).map(_.getPath.getName).collect {
         case n @ ManifestName(e) => (e.toLong, n)
       }.sortBy(_._1).lastOption
-    committed match {
-      case Some((epoch, name)) =>
-        readManifestFile(fs, new HPath(mdir, name), epoch)
-      case None =>
-        val root = new HPath(shardsPath)
-        val legacy =
-          if (!fs.exists(root)) Map.empty[Int, LeafEntry]
-          else fs.listStatus(root).map(_.getPath.getName).collect {
-            case n if n.startsWith("__cell=") =>
-              val cell = n.stripPrefix("__cell=").toInt
-              cell -> LeafEntry(n, -1L, metaFans.getOrElse(cell, 1))
-          }.toMap
-        Manifest(0L, legacy)
+    committed.fold(Manifest(0L, Map.empty)) { case (epoch, name) =>
+      readManifestFile(fs, new HPath(mdir, name), epoch)
     }
   }
 
@@ -937,12 +887,10 @@ object ShardedHnsw {
     val keep = (next.leaves.values ++ prev.leaves.values).map(_.dir).toSet
     val root = new HPath(shardsPath)
     fs.listStatus(root).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val isLeaf = n.startsWith("leaf-") || n.startsWith("__cell=")
-      if (isLeaf && !keep(n)) graft.util.TableSwap.delete(fs, p)
+      if (p.getName.startsWith("leaf-") && !keep(p.getName))
+        graft.util.TableSwap.delete(fs, p)
     }
-    // table-presence marker for warehouse discovery (the hive layout
-    // inherited one from its parquet write)
+    // table-presence marker for warehouse discovery
     val marker = new HPath(root, "_SUCCESS")
     if (!fs.exists(marker)) fs.create(marker, true).close()
   }
@@ -950,10 +898,8 @@ object ShardedHnsw {
   private def leafDirName(cell: Int, epoch: Long) = s"leaf-$cell-e$epoch"
 
   /** Read the leaves a manifest references as one frame with the
-    * canonical (__cell, __sub, __graph) columns. Modern leaves carry
-    * `__cell` in their data; legacy hive leaves recover it from the
-    * dir name via a basePath read. Restricting to `cells` reads only
-    * those leaves' files. */
+    * canonical (__cell, __sub, __graph) columns. Restricting to `cells`
+    * reads only those leaves' files. */
   private def readLeaves(spark: SparkSession, shardsPath: String,
                          manifest: Manifest,
                          cells: Option[Set[Int]] = None): DataFrame = {
@@ -961,31 +907,17 @@ object ShardedHnsw {
       case Some(cs) => manifest.leaves.filter { case (c, _) => cs(c) }
       case None => manifest.leaves
     }
-    val (legacy, modern) = chosen.partition(_._2.dir.startsWith("__cell="))
-    val frames = Seq(
-      if (modern.isEmpty) None
-      else Some(spark.read.parquet(
-          modern.values.map(e => s"$shardsPath/${e.dir}").toSeq: _*)
-        .select("__cell", "__sub", "__graph")),
-      if (legacy.isEmpty) None
-      else Some(spark.read.option("basePath", shardsPath).parquet(
-          legacy.values.map(e => s"$shardsPath/${e.dir}").toSeq: _*)
-        .select(col("__cell").cast("int"), col("__sub"), col("__graph")))
-    ).flatten
-    if (frames.isEmpty)
+    if (chosen.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__cell",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("__sub",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("__graph",
-            org.apache.spark.sql.types.BinaryType))))
-    else frames.reduce(_ unionByName _)
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "__cell INT, __sub INT, __graph BINARY"))
+    else spark.read.parquet(
+        chosen.values.map(e => s"$shardsPath/${e.dir}").toSeq: _*)
+      .select("__cell", "__sub", "__graph")
   }
 
-  /** Persist the tier: modern epoch-0 leaves + manifest + the meta
+  /** Persist the tier: epoch-0 leaves + manifest + the meta
     * table (frozen centers, build fans, build params, watermark cap).
     * A full (re)build replacing any previous state under the root —
     * CRASH-SAFE: the whole new tier (leaves + manifest + marker)
@@ -1022,8 +954,11 @@ object ShardedHnsw {
     }.toMap
     graft.util.TableSwap.delete(fs, new HPath(scratch))
     val buildId = java.util.UUID.randomUUID().toString
-    val drift0 = Option(sh.buildDrift).flatten.map { case (mean, p95) =>
-      DriftState(mean, p95, 0L, 0.0, 0.0) }
+    // a loaded handle keeps its tier's drift state (an export re-saves
+    // one); a fresh build starts from its own baseline
+    val drift0 = Option(sh.source).flatten.flatMap(_._2.drift)
+      .orElse(Option(sh.buildDrift).flatten.map { case (mean, p95) =>
+        DriftState(mean, p95, 0L, 0.0, 0.0) })
     val m0 = Manifest(0L, leaves, Some(buildId), drift0)
     installManifest(spark, buildRoot, m0, m0)
     graft.util.TableSwap.rewrite(metaPath,
@@ -1042,7 +977,7 @@ object ShardedHnsw {
   def load(spark: SparkSession, shardsPath: String,
            metaPath: String): Shards = {
     val mi = readMeta(spark, metaPath)
-    val manifest = currentManifest(spark, shardsPath, mi.subsOf)
+    val manifest = currentManifest(spark, shardsPath)
     // a save() crash between the meta rewrite and the root swap leaves
     // a meta/blob pair from DIFFERENT builds — the centers would route
     // queries to the wrong cells, so refuse loudly (callers degrade to
@@ -1066,7 +1001,7 @@ object ShardedHnsw {
   def driftRatio(spark: SparkSession, shardsPath: String,
                  metaPath: String): Option[Double] = {
     val mi = readMeta(spark, metaPath)
-    currentManifest(spark, shardsPath, mi.subsOf).drift.flatMap(_.ratio)
+    currentManifest(spark, shardsPath).drift.flatMap(_.ratio)
   }
 
   /** O(touched) ingest maintenance of the PERSISTED tier (VERDICT r16
@@ -1108,7 +1043,7 @@ object ShardedHnsw {
     if (batch.isEmpty) return Nil
     import spark.implicits._
     val mi = readMeta(spark, metaPath)
-    val manifest = currentManifest(spark, shardsPath, mi.subsOf)
+    val manifest = currentManifest(spark, shardsPath)
     // write-side torn-save gate (ADVICE r18): never commit an epoch
     // into a blob root whose build the meta doesn't match
     requirePaired(mi, manifest)
@@ -1282,7 +1217,7 @@ object ShardedHnsw {
     val fs = graft.util.TableSwap.fileSystem(spark, shardsPath)
     if (!fs.exists(new HPath(shardsPath))) return
     val mi = readMeta(spark, metaPath)
-    val manifest = currentManifest(spark, shardsPath, mi.subsOf)
+    val manifest = currentManifest(spark, shardsPath)
     // write-side torn-save gate (ADVICE r18), same as insertPersisted
     requirePaired(mi, manifest)
     val touched = touchedCells.distinct.sorted
@@ -1337,16 +1272,13 @@ object ShardedHnsw {
 
   /** Crash sweep for the persisted tier. The manifest design has no
     * torn-swap state (the rename IS the commit), so recovery is
-    * garbage collection: leaf dirs no committed manifest references
-    * (a crashed batch's orphans), stranded `_batch_tmp` scratch, and
-    * stale manifest temps all clear — but ONLY once older than
+    * garbage collection: leaf dirs neither of the newest two committed
+    * manifests references (a crashed batch's orphans), stranded
+    * `_batch_tmp`/`_build_tmp` scratch, and stale manifest temps all
+    * clear — but ONLY once older than
     * `spark.graft.repair.minScratchAgeMs` (default 10 min), so a
     * sweep racing a LIVE writer's in-flight batch can never destroy
-    * its scratch (ADVICE r17). Legacy round-17 states still heal
-    * unconditionally: a `<shards>_cell<N>_old` whose live leaf is
-    * missing renames back (the old two-rename swap died between
-    * move-aside and install), and legacy per-leaf scratch sweeps
-    * under the same age guard. Idempotent; wired into
+    * its scratch (ADVICE r17). Idempotent; wired into
     * `Library.repair`'s crash sweep. */
   def repairLeaves(spark: SparkSession, shardsPath: String): Unit = {
     val fs = graft.util.TableSwap.fileSystem(spark, shardsPath)
@@ -1355,52 +1287,26 @@ object ShardedHnsw {
     val now = System.currentTimeMillis()
     def oldEnough(p: HPath): Boolean =
       now - fs.getFileStatus(p).getModificationTime >= minAge
-    val root = new HPath(shardsPath)
-    val parent = root.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val name = root.getName
-    val Scratch = (java.util.regex.Pattern.quote(name) +
-      "_cell(-?\\d+)_(tmp|old)").r
-    val scratch = fs.listStatus(parent).map(_.getPath)
-      .filter(p => Scratch.pattern.matcher(p.getName).matches())
-    // legacy torn swap: restore is a correctness fix — unconditional
-    scratch.filter(_.getName.endsWith("_old")).foreach { old =>
-      val cell = Scratch.findFirstMatchIn(old.getName).get.group(1)
-      val live = new HPath(s"$shardsPath/__cell=$cell")
-      if (!fs.exists(live) && !fs.rename(old, live))
-        throw new java.io.IOException(
-          s"crash recovery failed restoring $live")
-    }
-    scratch.filter(p => fs.exists(p) && oldEnough(p))
+    Seq(batchScratch(shardsPath), buildScratch(shardsPath))
+      .map(new HPath(_))
+      .filter(p => fs.exists(p) && oldEnough(p))
       .foreach(graft.util.TableSwap.delete(fs, _))
-    val batchTmp = new HPath(batchScratch(shardsPath))
-    if (fs.exists(batchTmp) && oldEnough(batchTmp))
-      graft.util.TableSwap.delete(fs, batchTmp)
-    val buildTmp = new HPath(buildScratch(shardsPath))
-    if (fs.exists(buildTmp) && oldEnough(buildTmp))
-      graft.util.TableSwap.delete(fs, buildTmp)
+    val root = new HPath(shardsPath)
     if (!fs.exists(root)) return
     // orphan leaf dirs + stale manifest temps, age-guarded
-    val manifest = currentManifest(spark, shardsPath, Map.empty)
-    val prevEpochs = {
-      val mdir = new HPath(manifestDir(shardsPath))
-      if (!fs.exists(mdir)) Set.empty[Long]
+    val mdir = new HPath(manifestDir(shardsPath))
+    val epochs =
+      if (!fs.exists(mdir)) Seq.empty[Long]
       else fs.listStatus(mdir).map(_.getPath.getName).collect {
-        case ManifestName(e) => e.toLong }.toSet
-    }
-    val keep: Set[String] =
-      if (prevEpochs.isEmpty) manifest.leaves.values.map(_.dir).toSet
-      else prevEpochs.toSeq.sorted.takeRight(2).flatMap { e =>
-        val mi = currentManifestAt(spark, shardsPath, e)
-        mi.leaves.values.map(_.dir)
-      }.toSet
+        case ManifestName(e) => e.toLong }.toSeq
+    val keep: Set[String] = epochs.sorted.takeRight(2).flatMap { e =>
+      currentManifestAt(spark, shardsPath, e).leaves.values.map(_.dir)
+    }.toSet
     fs.listStatus(root).map(_.getPath).foreach { p =>
       val n = p.getName
-      val isLeaf = n.startsWith("leaf-") || n.startsWith("__cell=")
-      if (isLeaf && !keep(n) && oldEnough(p))
+      if (n.startsWith("leaf-") && !keep(n) && oldEnough(p))
         graft.util.TableSwap.delete(fs, p)
     }
-    val mdir = new HPath(manifestDir(shardsPath))
     if (fs.exists(mdir))
       fs.listStatus(mdir).map(_.getPath)
         .filter(p => p.getName.startsWith(".m") &&

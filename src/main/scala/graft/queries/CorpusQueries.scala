@@ -2101,8 +2101,8 @@ object CorpusQueries {
           .select(col("vec_id").cast("string").as("chunkId"),
             col("embedding"))
           .write.mode("overwrite").parquet(s"$wh/embeddings")
+        val lib = new graft.Library(s, wh) // stamps the empty warehouse
         asWarehouse(emb)
-        val lib = new graft.Library(s, wh)
         // k=7 keeps the artifact KIND distinct from q167/q178/q179 —
         // the facade build must actually run for this stamp
         lib.enableKnnEdges(k = 7, edgeSource = "ivf", nCells = 8,

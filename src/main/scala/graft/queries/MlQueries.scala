@@ -1591,6 +1591,8 @@ object MlQueries {
       emb.select(concat(lit("c"), col("vec_id")).as("conceptId"),
           col("embedding"))
         .write.mode(SaveMode.Overwrite).parquet(s"$wh/concept_embeddings")
+      // the tables above are the current layout, written by hand
+      graft.util.WarehouseFormat.stamp(graft.util.TableSwap.fileSystem(s, wh), wh)
       wh
     })
 

@@ -1,13 +1,14 @@
 package graft.tools
 
-/** The 10×-style PAIR-INTERPOLATED embedding corpus, shared by
-  * `Round17Bench` and `GraphRankSpec`'s audit-fidelity-at-10× test so
-  * the bench's corpus and the spec's floors can never silently
-  * desynchronize. Replicated (or merely jittered) copies sit on top
-  * of their parent, land in its IVF cell, and flatten every
-  * probe-vs-recall curve to 1.0 (measured) — interpolation between
-  * deterministic vector PAIRS fills the space BETWEEN clusters, so
-  * cell walls and neighbor structure genuinely move with N. */
+/** The 10×-style PAIR-INTERPOLATED embedding corpus, shared by the
+  * `Round19Bench`/`Round20Bench` tools and `GraphRankSpec`'s
+  * audit-fidelity-at-10× test so the benches' corpus and the spec's
+  * floors can never silently desynchronize. Replicated (or merely
+  * jittered) copies sit on top of their parent, land in its IVF cell,
+  * and flatten every probe-vs-recall curve to 1.0 (measured) —
+  * interpolation between deterministic vector PAIRS fills the space
+  * BETWEEN clusters, so cell walls and neighbor structure genuinely
+  * move with N. */
 object ScaleCorpus {
 
   /** One interpolated copy of `base`. `copy` 0 is the identity copy;

@@ -95,16 +95,20 @@ class CrashRecoverySpec extends SparkSpec {
       "stranded swap_old leaf must be restored, not destroyed, by a new bulk swap")
   }
 
-  test("legacy per-cell scratch (embeddings_ivf_cellN_old) is restored and swept") {
-    val l = freshLib("crash-legacy")
+  test("a delta leaf stranded in the delta-swap scratch (embeddings_ivf_delta_old) is restored and swept") {
+    val l = freshLib("crash-delta")
     l.buildVectorIndex(nCells = 3, nProbe = 3)
+    l.addMarkdown(Seq(("/crash-delta/late.md",
+      "# Late\n" + ("late appended delta doc words. " * 8))).toDS())
     val fs = fsOf(l)
     val wh = l.warehouse
-    assert(fs.rename(new HPath(s"$wh/embeddings_ivf/__cell=1"),
-      new HPath(s"$wh/embeddings_ivf_cell1_old")))
+    // the delta swap died after moving the live leaf aside
+    assert(fs.rename(new HPath(s"$wh/embeddings_ivf/__cell=-1"),
+      new HPath(s"$wh/embeddings_ivf_delta_old")))
     l.repair()
-    assert(!rootNames(wh).exists(_.matches("embeddings_ivf_cell\\d+_(tmp|old)")))
+    assert(!rootNames(wh).exists(_.matches("embeddings_ivf_delta_(tmp|old)")))
     val ivf = spark.read.parquet(s"$wh/embeddings_ivf")
+    assert(ivf.filter(col("__cell") === -1).count() > 0)
     assert(ivf.count() === l.embeddings.count())
   }
 

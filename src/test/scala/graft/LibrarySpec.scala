@@ -351,12 +351,6 @@ class LibrarySpec extends SparkSpec {
     l.enableKnnEdges(k, edgeSource = "srp", srpDim = 64)
     assert(meta().getAs[String]("edgeSource") === "srp")
     assert(l.knnEdges().collect().nonEmpty)
-    // a pre-round-19 meta table (k only) still reads: exact source
-    Seq(k).toDF("k").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$wh/knn_edges_meta")
-    val l2 = new Library(spark, wh)
-    assert(edgeSet(l2.knnEdges()) === scratch)
   }
 
   test("auto edge source re-resolves on corpus growth; a pinned exact source is honored (VERDICT r19 #1)") {
@@ -491,43 +485,6 @@ class LibrarySpec extends SparkSpec {
     assertFtsStatsMatchLens(wh)
     // and the surviving doc still ranks (search runs on live stats)
     assert(l.ftsSearch("beta", SearchOptions(limit = 5)).collect().nonEmpty)
-  }
-
-  test("pre-doclen warehouse migrates in place on first ftsSearch") {
-    val wh = tempDir("graft-wh-legacy").toString
-    val l = new Library(spark, wh)
-    l.addMarkdown(Seq(
-      ("/a.md", "# A\n" + ("cardamom flavored legacy content here. " * 10))).toDS())
-    l.rebuildFtsIndex()
-    val expected = l.ftsSearch("cardamom", SearchOptions(limit = 5)).collect()
-      .map(r => (r.getAs[String]("docId"), r.getAs[Int]("chunkIndex"))).toSeq
-    // downgrade to the pre-round-5 layout: flat postings (no __tb, no
-    // doclen), no fts_stats — what any older warehouse on disk looks like
-    val flat = operators.Bm25.postings(l.chunks, "id", "content")
-    graft.util.TableSwap.rewrite(s"$wh/fts_postings", flat)
-    graft.util.TableSwap.delete(new java.io.File(s"$wh/fts_stats"))
-    val got = l.ftsSearch("cardamom", SearchOptions(limit = 5)).collect()
-      .map(r => (r.getAs[String]("docId"), r.getAs[Int]("chunkIndex"))).toSeq
-    assert(got === expected, "legacy warehouse search diverged after migration")
-    assertFtsStatsMatchLens(wh)
-  }
-
-  test("migration during a batch append does not double-index the batch") {
-    val wh = tempDir("graft-wh-dblapp").toString
-    val l = new Library(spark, wh)
-    l.addMarkdown(Seq(
-      ("/a.md", "# A\n" + ("first batch content tokens for the index. " * 10))).toDS())
-    l.rebuildFtsIndex()
-    // downgrade: drop fts_stats so the NEXT append triggers migration
-    graft.util.TableSwap.delete(new java.io.File(s"$wh/fts_stats"))
-    l.addMarkdown(Seq(
-      ("/b.md", "# B\n" + ("second batch content tokens arriving later. " * 10))).toDS())
-    // the rebuild already covered batch B (chunks are written first);
-    // a naive append would duplicate every (id, term) row of B
-    val post = spark.read.parquet(s"$wh/fts_postings")
-    assert(post.groupBy("id", "term").count().filter(col("count") > 1).count() === 0,
-      "duplicate postings rows after migration-during-append")
-    assertFtsStatsMatchLens(wh)
   }
 
   test("exportTo copies the whole warehouse including taxonomy tables") {

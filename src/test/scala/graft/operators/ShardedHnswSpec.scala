@@ -113,13 +113,13 @@ class ShardedHnswSpec extends SparkSpec {
   /** Resolve a cell's live leaf directory through the committed
     * manifest — the only way readers locate leaves since round 18. */
   private def leafDir(shardsPath: String, cell: Int): Option[java.io.File] =
-    ShardedHnsw.currentManifest(spark, shardsPath, Map.empty)
+    ShardedHnsw.currentManifest(spark, shardsPath)
       .leaves.get(cell).map(e => new java.io.File(s"$shardsPath/${e.dir}"))
 
   private def manifestOf(shardsPath: String) =
-    ShardedHnsw.currentManifest(spark, shardsPath, Map.empty)
+    ShardedHnsw.currentManifest(spark, shardsPath)
 
-  test("codec: v2 primitive layout round-trips bit-identically, reads legacy Java blobs, and shrinks them") {
+  test("codec: v2 primitive layout round-trips bit-identically") {
     val rows = emb.as[(Long, Array[Float])].collect().sortBy(_._1)
       .take(200).toSeq
     val g = Hnsw.build(rows, 16, 100)
@@ -138,20 +138,6 @@ class ShardedHnswSpec extends SparkSpec {
       assert(Hnsw.searchKnn(g2, v, 5, 64).toSeq ===
         Hnsw.searchKnn(g, v, 5, 64).toSeq)
     }
-    // a legacy ObjectOutputStream blob (pre-round-18 warehouses) still
-    // decodes through the magic-number dispatch
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(g); oos.close()
-    val legacy = bos.toByteArray
-    val g3 = ShardedHnsw.deserialize(legacy)
-    assert(g3.ids.toSeq === g.ids.toSeq)
-    assert(g3.neighbors.map(_.map(_.toSeq).toSeq).toSeq ===
-      g.neighbors.map(_.map(_.toSeq).toSeq).toSeq)
-    info(s"v2 blob ${v2.length} bytes vs legacy ${legacy.length} " +
-      f"(${v2.length.toDouble / legacy.length}%.2fx)")
-    assert(v2.length < legacy.length,
-      "the primitive layout must beat Java serialization on size")
   }
 
   test("serving decode cache: a hot shard deserializes once per JVM") {
@@ -354,62 +340,41 @@ class ShardedHnswSpec extends SparkSpec {
       "the previous epoch's leaf must be retained")
   }
 
-  test("crash sweep: orphan leaves and stranded scratch clear under the age guard; legacy hive layouts migrate and torn legacy swaps heal") {
+  test("crash sweep: orphan leaves and stranded scratch clear, age-guarded") {
     val (shardsPath, metaPath) = tempTier("shnsw-repair")
     val sh = ShardedHnsw.build(emb, "vec_id", "embedding", nCells = 4)
-    // build a LEGACY (round-17 hive) warehouse by hand: the blob table
-    // partitioned by __cell, no manifest
-    graft.util.TableSwap.rewrite(shardsPath, sh.table,
-      partitionBy = Seq("__cell"))
-    graft.util.TableSwap.rewrite(metaPath, ShardedHnsw.metaFrame(sh))
+    ShardedHnsw.save(sh, shardsPath, metaPath)
     val want = searchAll(ShardedHnsw.load(spark, shardsPath, metaPath))
-    assert(want.nonEmpty, "a legacy layout must read via the synthesized manifest")
+    assert(want.nonEmpty)
     val fs = graft.util.TableSwap.fileSystem(spark, shardsPath)
     import org.apache.hadoop.fs.{Path => HPath}
-    val cell = sh.table.select("__cell").as[Int].head()
-    // legacy torn swap: live leaf gone, `_old` sibling holds it
-    assert(fs.rename(new HPath(s"$shardsPath/__cell=$cell"),
-      new HPath(s"${shardsPath}_cell${cell}_old")))
-    // stranded batch scratch + an orphan modern leaf from a crashed
-    // batch (written, never referenced by any manifest)
+    // stranded batch scratch + an orphan leaf from a crashed batch
+    // (written, never referenced by any manifest)
     Seq((0, 0, Array.emptyByteArray)).toDF("__cell", "__sub", "__graph")
       .write.partitionBy("__cell").parquet(s"${shardsPath}_batch_tmp")
     new java.io.File(s"$shardsPath/leaf-99-e7").mkdirs()
     spark.conf.set("spark.graft.repair.minScratchAgeMs", "0")
     try ShardedHnsw.repairLeaves(spark, shardsPath)
     finally spark.conf.unset("spark.graft.repair.minScratchAgeMs")
-    assert(fs.exists(new HPath(s"$shardsPath/__cell=$cell")),
-      "legacy torn swap must restore")
-    assert(!fs.exists(new HPath(s"${shardsPath}_cell${cell}_old")))
     assert(!fs.exists(new HPath(s"${shardsPath}_batch_tmp")))
     assert(!new java.io.File(s"$shardsPath/leaf-99-e7").exists(),
       "an orphan leaf no manifest references must sweep")
+    assert(manifestOf(shardsPath).leaves.values.forall(e =>
+      new java.io.File(s"$shardsPath/${e.dir}").exists()),
+      "every committed leaf must survive the sweep")
     assert(searchAll(ShardedHnsw.load(spark, shardsPath, metaPath))
       === want)
     // the age guard: a YOUNG scratch root (a live writer's in-flight
-    // batch) must survive a default-threshold sweep (ADVICE r17)
+    // batch) and a young orphan must survive a default-threshold sweep
+    // (ADVICE r17)
     Seq((0, 0, Array.emptyByteArray)).toDF("__cell", "__sub", "__graph")
       .write.partitionBy("__cell").parquet(s"${shardsPath}_batch_tmp")
+    new java.io.File(s"$shardsPath/leaf-99-e8").mkdirs()
     ShardedHnsw.repairLeaves(spark, shardsPath) // default 10-min guard
     assert(fs.exists(new HPath(s"${shardsPath}_batch_tmp")),
       "repair must not destroy a live writer's young scratch")
-    graft.util.TableSwap.delete(fs, new HPath(s"${shardsPath}_batch_tmp"))
-    // a maintenance batch over the LEGACY layout migrates only the
-    // touched leaf to the modern form and commits through the manifest
-    val nv = sh.centers(0).map(_.toFloat); nv(0) += 1e-3f
-    ShardedHnsw.insertPersisted(spark, shardsPath, metaPath,
-      Seq((7_500_000L, nv)))
-    val m1 = manifestOf(shardsPath)
-    assert(m1.epoch === 1L)
-    assert(m1.leaves(0).dir === "leaf-0-e1")
-    assert(m1.leaves.exists(_._2.dir.startsWith("__cell=")),
-      "untouched legacy leaves stay in place, referenced by the manifest")
-    val self = ShardedHnsw.searchBatch(
-        ShardedHnsw.load(spark, shardsPath, metaPath),
-        Seq((1L, nv.toSeq)).toDF("qid", "qv"), "qid", "qv", 1,
-        nProbe = 4)
-      .collect().map(_.getLong(2))
-    assert(self.toSeq === Seq(7_500_000L))
+    assert(new java.io.File(s"$shardsPath/leaf-99-e8").exists(),
+      "repair must not destroy a live writer's young leaf")
   }
 
   test("oversized cells sub-shard: per-shard memory bounded, recall kept") {
@@ -629,17 +594,24 @@ class ShardedHnswSpec extends SparkSpec {
     val want = rows(lib.shardedSearch(qv, opts))
     val dest = tempDir("graft-exp2").toString
     lib.exportTo(dest)
-    // the exported blob table has exactly ONE row per (cell, sub)
-    val exported = spark.read.parquet(s"$dest/embeddings_hnsw_sharded")
+    // the export is one epoch: exactly ONE blob row per (cell, sub)
+    val destShards = s"$dest/embeddings_hnsw_sharded"
+    val destMeta = s"$dest/embeddings_hnsw_sharded_meta"
+    assert(manifestOf(destShards).epoch === 0L)
+    val exported = ShardedHnsw.load(spark, destShards, destMeta).table
       .select("__cell", "__sub").collect()
-      .map(r => (r.getAs[Number]("__cell").intValue(), r.getInt(1)))
+      .map(r => (r.getInt(0), r.getInt(1)))
     assert(exported.length === exported.distinct.length,
       "export must carry one epoch, not the retention window")
-    // no build-id rides along (it pairs ONE save's meta with ONE root)
-    assert(!spark.read.parquet(s"$dest/embeddings_hnsw_sharded_meta")
-      .columns.contains("__buildid"))
+    // the exported meta and manifest carry the same build id, the
+    // export's own (it pairs ONE save's meta with ONE root)
+    def metaBuildIds(metaPath: String) = spark.read.parquet(metaPath)
+      .select("__buildid").distinct().collect().map(_.getString(0)).toSeq
+    val Seq(destId) = metaBuildIds(destMeta)
+    assert(manifestOf(destShards).buildId === Some(destId))
+    assert(metaBuildIds(s"$wh/embeddings_hnsw_sharded_meta") !== Seq(destId))
     // the restored warehouse serves the same rows through the
-    // legacy-migration read path
+    // manifest path
     val restored = new graft.Library(spark, dest)
     assert(rows(restored.shardedSearch(qv, opts)) === want)
   }
