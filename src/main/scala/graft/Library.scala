@@ -446,12 +446,9 @@ class Library(val spark: SparkSession, val warehouse: String,
       val cells = graft.plans.IvfRegistry.probeCells(
         ivf.centers, queryVec.map(_.toDouble), ivf.nProbe)
       // the delta bucket (appends since the last rebuild) is ALWAYS
-      // probed — see appendToVectorIndex. Tombstoned vectors leave the
-      // probe slice BEFORE the top-k cut (they stay physical until
-      // compaction)
-      Library.antiTomb(
-        ivf.cells.filter(col("__cell").isin((cells :+ DeltaCell): _*)),
-        "chunkId", snap.chunkTombstones)
+      // probed — see appendToVectorIndex. Tombstoned vectors stay
+      // physical until compaction; topHits drops them before the cut
+      ivf.cells.filter(col("__cell").isin((cells :+ DeltaCell): _*))
     }
 
   /** Vectors appended after an index build land in an always-probed
@@ -524,47 +521,60 @@ class Library(val spark: SparkSession, val warehouse: String,
       meta.withColumn("indexedRows", lit(indexed + deltaRows)))
   }
 
-  /** Exact vector top-k over chunks (J1 three-way join shape): score all
-    * embeddings (or just the probed IVF cells when an index is built),
-    * TakeOrdered k, then join chunk content and broadcast document
-    * metadata. Tag/threshold filters push below the top-k. */
+  /** Exact vector top-k over chunks: score all embeddings (or just the
+    * probed IVF cells when an index is built), resolve and cut to k
+    * through the snapshot's chunk directory ([[topHits]]), then read
+    * content for the k survivors ([[withContent]]). Tag/threshold
+    * filters apply below the top-k. */
   def vectorSearch(queryVec: Array[Float], opts: SearchOptions): DataFrame =
     vectorSearch(serving(), queryVec, opts)
 
   private def vectorSearch(snap: ServingSnapshot, queryVec: Array[Float],
-                           opts: SearchOptions): DataFrame = {
-    val ch = snap.chunks
-    val docs = snap.docsTagged(opts.tags)
-      .select(col("id").as("docId"), col("title"))
-    val base = ivfScored(snap, queryVec).getOrElse(snap.embeddings)
-    val scored = base
-      .withColumn("score",
-        VectorFunctions.distToScore(lit(1.0) -
-          graft.plans.CosineSimilarity(col("embedding"),
-            VectorSearch.queryVec(queryVec.toSeq))))
-    val thresholded = opts.threshold.map(t => scored.filter(col("score") >= t))
-      .getOrElse(scored)
+                           opts: SearchOptions): DataFrame =
+    withContent(snap, vectorTopK(snap, queryVec, opts), opts.limit)
 
-    // rank on narrow columns (ids + score + tag predicate) and fetch the
-    // wide content column for only the k survivors — same pattern as
-    // ftsSearch; the content of every candidate must not ride through
-    // the join and the top-k heap
-    val ranked = thresholded
-      .join(ch.select("id", "docId", "page", "chunkIndex"),
-        col("chunkId") === ch("id"))
-      .join(broadcast(docs), Seq("docId"))
-      .select(col("chunkId"), col("docId"), col("title"), col("page"),
-        col("chunkIndex"), col("score"))
-      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
-      .limit(opts.limit)
-    ranked
-      .join(ch.select(col("id").as("chunkId"), col("content")), Seq("chunkId"))
-      .select(col("docId"), col("title"), col("page"),
-        col("chunkIndex"), col("content"), col("score"),
-        lit("vector").as("matchType"))
-      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
-      .limit(opts.limit)
+  private def vectorTopK(snap: ServingSnapshot, queryVec: Array[Float],
+                         opts: SearchOptions): DataFrame = {
+    val base = ivfScored(snap, queryVec).getOrElse(snap.embeddingsRaw)
+    val scored = base.select(col("chunkId"),
+      VectorFunctions.distToScore(lit(1.0) -
+        graft.plans.CosineSimilarity(col("embedding"),
+          VectorSearch.queryVec(queryVec.toSeq))).as("score"))
+    rankAnnHits(snap, scored, opts)
   }
+
+  /** The ranked top-k of a scored `(chunkId, score)` candidate frame,
+    * narrow: `(chunkId, docId, title, page, chunkIndex, score,
+    * matchType)`. Each candidate resolves map-side through the
+    * snapshot's chunk directory, which drops dead chunks and documents
+    * outside `opts.tags` and supplies the `(score desc, docId,
+    * chunkIndex)` tie-break keys, so the scan, the resolution and the
+    * cut run as one stage with no join. */
+  private def topHits(snap: ServingSnapshot, scored: DataFrame,
+                      opts: SearchOptions, matchType: String): DataFrame =
+    scored
+      .select(col("chunkId"), col("score"),
+        snap.locate(col("chunkId"), opts.tags).as("hit"))
+      .filter(col("hit").isNotNull)
+      .select(col("chunkId"), col("hit.docId").as("docId"),
+        col("hit.title").as("title"), col("hit.page").as("page"),
+        col("hit.chunkIndex").as("chunkIndex"), col("score"),
+        lit(matchType).as("matchType"))
+      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
+      .limit(opts.limit)
+
+  /** The search output contract for `k` ranked narrow rows in
+    * [[topHits]]'s shape: content is read once, for the ranked rows only,
+    * by a join that broadcasts them against the physical `chunks` table
+    * (the ranked ids are live). */
+  private def withContent(snap: ServingSnapshot, ranked: DataFrame,
+                          k: Int): DataFrame =
+    snap.chunksRaw.select(col("id").as("chunkId"), col("content"))
+      .join(broadcast(ranked), Seq("chunkId"))
+      .select(col("docId"), col("title"), col("page"), col("chunkIndex"),
+        col("content"), col("score"), col("matchType"))
+      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
+      .limit(k)
 
   // ------------------------------------------------------------ HNSW index
 
@@ -948,14 +958,16 @@ class Library(val spark: SparkSession, val warehouse: String,
     * reloads itself once and retries (the staleness guard, VERDICT
     * r18 #7). */
   def shardedSearch(queryVec: Array[Float], opts: SearchOptions,
-                    nProbe: Int = -1, ef: Int = 64): DataFrame =
-    shardedSearch(serving(), queryVec, opts, nProbe, ef)
+                    nProbe: Int = -1, ef: Int = 64): DataFrame = {
+    val snap = serving()
+    withContent(snap, shardedTopK(snap, queryVec, opts, nProbe, ef), opts.limit)
+  }
 
-  private def shardedSearch(snap: ServingSnapshot, queryVec: Array[Float],
-                            opts: SearchOptions, nProbe: Int,
-                            ef: Int): DataFrame =
+  private def shardedTopK(snap: ServingSnapshot, queryVec: Array[Float],
+                          opts: SearchOptions, nProbe: Int,
+                          ef: Int): DataFrame =
     loadSharded() match {
-      case None => vectorSearch(snap, queryVec, opts)
+      case None => vectorTopK(snap, queryVec, opts)
       case Some(sh) =>
         val k = math.max(opts.limit * 2, 16)
         val nCells = sh.centers.length
@@ -1026,7 +1038,7 @@ class Library(val spark: SparkSession, val warehouse: String,
                   // clamp: an out-of-band REBUILD may have fewer cells
                   // than the budget computed against the stale handle
                   runOnce(sh2, math.min(np, sh2.centers.length))
-                case None => return vectorSearch(snap, queryVec, opts)
+                case None => return vectorTopK(snap, queryVec, opts)
               }
           }
         val scored = hitRows.toSeq.toDF("id", "cos_dist")
@@ -1176,7 +1188,7 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   @transient private var hnswCache
       : Option[(graft.operators.Hnsw.Graph, Array[String])] = None
-  private def loadHnsw(): Option[(graft.operators.Hnsw.Graph, Array[String])] =
+  private[graft] def loadHnsw(): Option[(graft.operators.Hnsw.Graph, Array[String])] =
     hnswCache.orElse {
       if (!tableExists("embeddings_hnsw_meta")) None
       else if (!hnswWithinDriverBudget()) None
@@ -1205,18 +1217,20 @@ class Library(val spark: SparkSession, val warehouse: String,
     }
 
   /** Single-query graph search: HNSW top-k from driver memory, then the
-    * usual chunk/doc joins. Same output shape as [[vectorSearch]];
-    * tombstoned or repaired-away chunks drop out at the (live) chunks
-    * join — `ef` over-fetches so k survivors remain. Falls back to
-    * [[vectorSearch]] when no HNSW index exists. */
+    * usual directory resolution. Same output shape as [[vectorSearch]];
+    * tombstoned or repaired-away chunks drop out there — `ef`
+    * over-fetches so k survivors remain. Falls back to [[vectorSearch]]
+    * when no HNSW index exists. */
   def hnswSearch(queryVec: Array[Float], opts: SearchOptions,
-                 ef: Int = 64): DataFrame =
-    hnswSearch(serving(), queryVec, opts, ef)
+                 ef: Int = 64): DataFrame = {
+    val snap = serving()
+    withContent(snap, hnswTopK(snap, queryVec, opts, ef), opts.limit)
+  }
 
-  private def hnswSearch(snap: ServingSnapshot, queryVec: Array[Float],
-                         opts: SearchOptions, ef: Int): DataFrame =
+  private def hnswTopK(snap: ServingSnapshot, queryVec: Array[Float],
+                       opts: SearchOptions, ef: Int): DataFrame =
     loadHnsw() match {
-      case None => vectorSearch(snap, queryVec, opts)
+      case None => vectorTopK(snap, queryVec, opts)
       case Some((g, cids)) =>
         val hits = graft.operators.Hnsw
           .searchKnn(g, queryVec, math.max(opts.limit * 2, 16),
@@ -1240,39 +1254,26 @@ class Library(val spark: SparkSession, val warehouse: String,
     * see [[shardedSearch]]. The other tiers ignore `nProbe`; `ef` also
     * reaches [[hnswSearch]]. */
   def annSearch(queryVec: Array[Float], opts: SearchOptions,
-                nProbe: Int = -1, ef: Int = 64): DataFrame =
-    annSearch(serving(), queryVec, opts, nProbe, ef)
-
-  private def annSearch(snap: ServingSnapshot, queryVec: Array[Float],
-                        opts: SearchOptions, nProbe: Int,
-                        ef: Int): DataFrame =
-    if (snap.shardedTier) shardedSearch(snap, queryVec, opts, nProbe, ef)
-    else if (snap.hnswTier) hnswSearch(snap, queryVec, opts, ef)
-    else vectorSearch(snap, queryVec, opts)
-
-  /** Shared tail of the graph-ANN serving paths ([[hnswSearch]],
-    * [[shardedSearch]]): shape a (chunkId, score) candidate frame into
-    * the [[vectorSearch]] output contract — threshold, live-chunks
-    * join (tombstoned/deleted chunks drop here), broadcast tag-filtered
-    * docs join, the seven-column select and the (score desc, docId,
-    * chunkIndex) order + limit. One definition so the ANN tiers can
-    * never drift apart in shape. */
-  private def rankAnnHits(snap: ServingSnapshot, hitDf: DataFrame,
-                          opts: SearchOptions): DataFrame = {
-    val thresholded = opts.threshold
-      .map(t => hitDf.filter(col("score") >= t)).getOrElse(hitDf)
-    val ch = snap.chunks
-    val docs = snap.docsTagged(opts.tags)
-      .select(col("id").as("docId"), col("title"))
-    thresholded
-      .join(ch.select(col("id").as("chunkId"), col("docId"), col("page"),
-        col("chunkIndex"), col("content")), Seq("chunkId"))
-      .join(broadcast(docs), Seq("docId"))
-      .select(col("docId"), col("title"), col("page"), col("chunkIndex"),
-        col("content"), col("score"), lit("vector").as("matchType"))
-      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
-      .limit(opts.limit)
+                nProbe: Int = -1, ef: Int = 64): DataFrame = {
+    val snap = serving()
+    withContent(snap, annTopK(snap, queryVec, opts, nProbe, ef), opts.limit)
   }
+
+  private def annTopK(snap: ServingSnapshot, queryVec: Array[Float],
+                      opts: SearchOptions, nProbe: Int,
+                      ef: Int): DataFrame =
+    if (snap.shardedTier) shardedTopK(snap, queryVec, opts, nProbe, ef)
+    else if (snap.hnswTier) hnswTopK(snap, queryVec, opts, ef)
+    else vectorTopK(snap, queryVec, opts)
+
+  /** Shared tail of every vector path (the exact scan, [[hnswSearch]],
+    * [[shardedSearch]]): threshold a (chunkId, score) candidate frame
+    * and rank it through [[topHits]]. One definition so the tiers can
+    * never drift apart in shape. */
+  private[graft] def rankAnnHits(snap: ServingSnapshot, hitDf: DataFrame,
+                                 opts: SearchOptions): DataFrame =
+    topHits(snap, opts.threshold.fold(hitDf)(t => hitDf.filter(col("score") >= t)),
+      opts, "vector")
 
   // ------------------------------------------------------------- FTS index
 
@@ -1404,19 +1405,19 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   /** BM25 full-text search over chunk contents (J2/K4 shape). Uses the
     * persisted index when present (probe = pruned scan of the postings
-    * slice), falling back to an on-the-fly index over the chunk scan. */
-  def ftsSearch(query: String, opts: SearchOptions): DataFrame =
-    ftsSearch(serving(), query, opts)
+    * slice, scored in one stage), falling back to an on-the-fly index
+    * over the chunk scan. */
+  def ftsSearch(query: String, opts: SearchOptions): DataFrame = {
+    val snap = serving()
+    withContent(snap, ftsTopK(snap, query, opts), opts.limit)
+  }
 
-  private def ftsSearch(snap: ServingSnapshot, query: String,
-                        opts: SearchOptions): DataFrame = {
-    val ch = snap.chunks
-    val docs = snap.docsTagged(opts.tags)
-      .select(col("id").as("docId"), col("title"))
+  private def ftsTopK(snap: ServingSnapshot, query: String,
+                      opts: SearchOptions): DataFrame = {
     val terms = query.toLowerCase(java.util.Locale.ROOT)
       .split("\\s+").filter(_.nonEmpty).toSeq
     // FTS5 semantics: score globally, apply predicates (tags), THEN
-    // limit — limiting before the tag join would let untagged top
+    // limit — limiting before the tag filter would let untagged top
     // scorers crowd out every tagged match
     val hits = snap.ftsPostings match {
       case Some(postings) =>
@@ -1426,71 +1427,55 @@ class Library(val spark: SparkSession, val warehouse: String,
         val avgdl = if (n > 0) totalLen.toDouble / n.toDouble else 1.0
         // tombstoned chunks leave the slice BEFORE scoring, so df/N see
         // only live docs — score-exact with the rewrite path
-        Bm25.scoreAllDenorm(
-          Library.antiTomb(Bm25.termSlice(prunedPostings(postings, terms),
-            terms), "id", snap.chunkTombstones), n, avgdl)
+        Bm25.scoreSlice(snap.dropDeadChunks(
+          Bm25.termSlice(prunedPostings(postings, terms), terms), "id"),
+          n, avgdl)
       case None =>
+        val ch = snap.chunks
         val lens = Bm25.docLengths(ch, "id", "content").materializeOnce(eager = false)
         Bm25.scoreAllFromIndex(Bm25.postings(ch, "id", "content"), lens, terms)
     }
-    // rank on narrow columns (ids + score + tag predicate), and fetch
-    // the wide content column for only the k survivors
-    val ranked = hits
-      .join(ch.select("id", "docId", "page", "chunkIndex"), Seq("id"))
-      .join(broadcast(docs), Seq("docId"))
-      .orderBy(desc("bm25"), asc("docId"), asc("chunkIndex"))
-      .limit(opts.limit)
-    ranked
-      .join(ch.select(col("id"), col("content")), Seq("id"))
-      .select(col("docId"), col("title"), col("page"),
-        col("chunkIndex"), col("content"), col("bm25").as("score"),
-        lit("fts").as("matchType"))
-      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
+    topHits(snap, hits.select(col("id").as("chunkId"), col("bm25").as("score")),
+      opts, "fts")
   }
 
   /** Hybrid search — the flagship path (reference §3.1): vector ∪ fts,
     * fused on (docId, page, chunkIndex) with the 1.2× both-sources boost,
     * final ranked top-k. The FTS score is intentionally unnormalized
     * against the [0,1] vector score (reference quirk, preserved). Both
-    * legs and the context expansion read one snapshot. */
+    * legs and the context expansion read one snapshot; the legs fuse as
+    * narrow top-k lists and content is read once, for the fused rows. */
   def search(query: String, opts: SearchOptions = SearchOptions()): DataFrame = {
     val snap = serving()
-    val vec = annSearch(snap, embedder.embed(query), opts, nProbe = -1, ef = 64)
-      .select(col("docId"), col("page"), col("chunkIndex"),
-        col("title").as("v_title"), col("content").as("v_content"),
-        col("score"))
+    val vec = annTopK(snap, embedder.embed(query), opts, nProbe = -1, ef = 64)
     val ranked =
-      if (!opts.hybrid)
-        vec.select(col("docId"), col("v_title").as("title"), col("page"),
-          col("chunkIndex"), col("v_content").as("content"), col("score"),
-          lit("vector").as("matchType"))
+      if (!opts.hybrid) vec
       else {
-        // fts rows carry their own title/content: an fts-only hit must
-        // arrive complete (reference appends fts results whole)
-        val fts = ftsSearch(snap, query, opts)
-          .select(col("docId"), col("page"), col("chunkIndex"),
-            col("title").as("f_title"), col("content").as("f_content"),
-            col("score"))
-        HybridSearch.fuseTopK(
-          vec, fts, Seq("docId", "page", "chunkIndex"), opts.limit)
-          .select(col("docId"),
-            coalesce(col("v_title"), col("f_title")).as("title"),
-            col("page"), col("chunkIndex"),
-            coalesce(col("v_content"), col("f_content")).as("content"),
-            col("score"), col("match_type").as("matchType"))
+        def leg(df: DataFrame, side: String) =
+          df.select(col("docId"), col("page"), col("chunkIndex"),
+            col("chunkId").as(s"${side}_chunkId"),
+            col("title").as(s"${side}_title"), col("score"))
+        // an fts-only hit must arrive complete (the reference appends
+        // fts results whole): its id and title come from the fts leg
+        HybridSearch.fuseTopK(leg(vec, "v"), leg(ftsTopK(snap, query, opts), "f"),
+          Seq("docId", "page", "chunkIndex"), opts.limit)
+          .select(coalesce(col("v_chunkId"), col("f_chunkId")).as("chunkId"),
+            col("docId"), coalesce(col("v_title"), col("f_title")).as("title"),
+            col("page"), col("chunkIndex"), col("score"),
+            col("match_type").as("matchType"))
       }
     // reference --expand flag: replace each hit's content with the
     // budget-bounded neighborhood (one set-based join for all hits)
     opts.expandContext match {
-      case None => ranked
+      case None => withContent(snap, ranked, opts.limit)
       case Some(maxChars) =>
-        val hits = ranked.materializeOnce() // small: top-k rows
+        val hits = ranked.select(col("docId"), col("title"), col("page"),
+          col("chunkIndex"), col("score"), col("matchType"))
         val expanded = expandContext(snap,
           hits.select(col("docId"), col("chunkIndex")), maxChars, window = 32)
           .select(col("doc").as("docId"), col("hit_idx").as("chunkIndex"),
             col("context"), col("start_index"), col("end_index"))
-        hits.drop("content")
-          .join(expanded, Seq("docId", "chunkIndex"), "left_outer")
+        hits.join(expanded, Seq("docId", "chunkIndex"), "left_outer")
           .withColumnRenamed("context", "content")
           .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
     }

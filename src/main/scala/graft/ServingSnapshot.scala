@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The search path's view of a warehouse at one committed state.
@@ -15,8 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * It holds driver-side values only: resolved base frames (file listing
   * and schema, no data), the tombstone frames, the IVF centroids and
-  * `nProbe`, the BM25 `n`/`total_len`, and which tables exist. Nothing
-  * is cached in Spark, so `Materialize.releaseAll` has nothing to drop.
+  * `nProbe`, the BM25 `n`/`total_len`, the [[ChunkDirectory]] broadcast,
+  * and which tables exist. Nothing is cached in Spark (a broadcast is not
+  * a persisted RDD), so `Materialize.releaseAll` has nothing to drop.
   * Every value is a `lazy val`: a call builds only what it reads, once
   * per snapshot, thread-safely.
   *
@@ -35,23 +37,51 @@ private[graft] final class ServingSnapshot(spark: SparkSession,
 
   private lazy val tombstones: Option[DataFrame] =
     if (has("tombstones")) Some(read("tombstones")) else None
-  lazy val docTombstones: Option[DataFrame] =
-    tombstones.map(_.filter(col("kind") === "doc").select("id"))
-  lazy val chunkTombstones: Option[DataFrame] =
+  private lazy val chunkTombstones: Option[DataFrame] =
     tombstones.map(_.filter(col("kind") === "chunk").select("id"))
 
-  lazy val documents: DataFrame =
-    Library.antiTomb(read("documents"), "id", docTombstones)
+  /** The physical `chunks` and `embeddings`, tombstones NOT applied:
+    * the ranked search paths resolve liveness through [[directory]]. */
+  lazy val chunksRaw: DataFrame = read("chunks")
+  lazy val embeddingsRaw: DataFrame = read("embeddings")
   lazy val chunks: DataFrame =
-    Library.antiTomb(read("chunks"), "id", chunkTombstones)
-  lazy val embeddings: DataFrame =
-    Library.antiTomb(read("embeddings"), "chunkId", chunkTombstones)
+    Library.antiTomb(chunksRaw, "id", chunkTombstones)
   lazy val clusterSummaries: DataFrame = read("cluster_summaries")
 
-  /** Documents carrying any of `tags` (all documents when empty). */
-  def docsTagged(tags: Seq[String]): DataFrame =
-    if (tags.isEmpty) documents
-    else documents.filter(arrays_overlap(col("tags"), lit(tags.toArray)))
+  /** The live corpus's chunk locators and document titles and tags,
+    * collected to the driver once per snapshot and shipped by
+    * `SparkContext.broadcast`, which runs no job. */
+  lazy val directory: Broadcast[ChunkDirectory] = {
+    val dead = tombstones.fold(Array.empty[(String, String)])(
+      _.select("kind", "id").collect().map(r => (r.getString(0), r.getString(1))))
+    val deadDocs = dead.collect { case ("doc", id) => id }.toSet
+    val deadChunks = dead.collect { case ("chunk", id) => id }.toSet
+    val locs = chunksRaw.select("id", "docId", "page", "chunkIndex").collect()
+      .iterator.map(r => r.getString(0) ->
+        ChunkDirectory.Loc(r.getString(1), r.getInt(2), r.getInt(3)))
+      .filterNot(e => deadChunks(e._1)).toMap
+    val docs = read("documents").select("id", "title", "tags").collect()
+      .iterator.map(r => r.getString(0) -> ChunkDirectory.Doc(r.getString(1),
+        Option(r.getSeq[String](2)).map(_.toSet).orNull))
+      .filterNot(e => deadDocs(e._1)).toMap
+    spark.sparkContext.broadcast(new ChunkDirectory(locs, docs, deadChunks))
+  }
+
+  /** The `(docId, title, page, chunkIndex)` struct of chunk `id`, null
+    * unless the chunk is live and its document is live and carries any
+    * of `tags` (every document when `tags` is empty). */
+  def locate(id: Column, tags: Seq[String]): Column = {
+    val dir = directory
+    val wanted = tags.toSet
+    udf((c: String) => dir.value.locate(c, wanted)).apply(id)
+  }
+
+  /** `df` without the rows whose `idCol` chunk is tombstoned. */
+  def dropDeadChunks(df: DataFrame, idCol: String): DataFrame = {
+    val dir = directory
+    if (dir.value.deadChunks.isEmpty) df
+    else df.filter(udf((c: String) => !dir.value.deadChunks(c)).apply(col(idCol)))
+  }
 
   /** The IVF layout: centroids in cell order, the build's `nProbe`,
     * and the (unfiltered) cell table. None when no index is built. */
@@ -83,6 +113,32 @@ private[graft] final class ServingSnapshot(spark: SparkSession,
   def shardedTier: Boolean = has("embeddings_hnsw_sharded_meta") &&
     has("embeddings_hnsw_sharded") && has("embeddings_hnsw_sharded_ids")
   def hnswTier: Boolean = has("embeddings_hnsw_meta")
+}
+
+/** The serving path's driver-side index of the live corpus: each live
+  * chunk id's `(docId, page, chunkIndex)`, each live document's title
+  * and tags, and the tombstoned chunk ids. A search leg scores its slice
+  * and resolves liveness, tags and the `(score desc, docId, chunkIndex)`
+  * tie-break keys from it map-side, where it used to join `chunks`,
+  * `documents` and the tombstones. Content stays out: it is read for
+  * the ranked rows only. */
+private[graft] final class ChunkDirectory(
+    chunks: Map[String, ChunkDirectory.Loc],
+    docs: Map[String, ChunkDirectory.Doc],
+    val deadChunks: Set[String]) extends Serializable {
+
+  def locate(id: String, tags: Set[String]): Option[ChunkDirectory.Hit] =
+    for {
+      l <- chunks.get(id)
+      d <- docs.get(l.docId)
+      if tags.isEmpty || (d.tags != null && d.tags.exists(tags))
+    } yield ChunkDirectory.Hit(l.docId, d.title, l.page, l.chunkIndex)
+}
+
+private[graft] object ChunkDirectory {
+  final case class Loc(docId: String, page: Int, chunkIndex: Int)
+  final case class Doc(title: String, tags: Set[String])
+  final case class Hit(docId: String, title: String, page: Int, chunkIndex: Int)
 }
 
 private[graft] object ServingSnapshot {

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Materialize.MatOps
 
@@ -160,26 +161,48 @@ object Bm25 {
   def scoreAllDenorm(hits: DataFrame, n: Long, avgdl: Double): DataFrame = {
     // document frequency per query term (tiny: |terms| rows -> broadcast)
     val dfs = hits.groupBy("term").agg(count(lit(1)).as("df"))
+    hits
+      .join(broadcast(dfs), "term")
+      .withColumn("term_score", termScore(n, avgdl))
+      .groupBy("id")
+      .agg(foldTermScores)
+  }
+
+  /** [[scoreAllDenorm]] for a slice small enough for one task — a
+    * serving query's probe slice: the slice coalesces to one partition
+    * and df comes from a window over it, so the scan, df, scoring and
+    * the per-doc fold run as ONE stage with no exchange and no
+    * broadcast. Same expressions, so the same doubles. */
+  def scoreSlice(hits: DataFrame, n: Long, avgdl: Double): DataFrame =
+    hits.coalesce(1)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+      .withColumn("term_score", termScore(n, avgdl))
+      .groupBy("id")
+      .agg(foldTermScores)
+
+  /** One query term's contribution `idf(df) · tfNorm(tf, doclen)` over
+    * rows carrying `df`, `tf` and `doclen`. */
+  private def termScore(n: Long, avgdl: Double): Column = {
     val idf = log(lit(1.0) +
       (lit(n.toDouble) - col("df").cast("double") + 0.5) /
         (col("df").cast("double") + 0.5))
     val tfNorm = (col("tf").cast("double") * (K1 + 1)) /
       (col("tf").cast("double") +
         lit(K1) * (lit(1 - B) + lit(B) * col("doclen").cast("double") / avgdl))
-    hits
-      .join(broadcast(dfs), "term")
-      .withColumn("term_score", idf * tfNorm)
-      .groupBy("id")
-      // deterministic accumulation: per-term scores are IEEE-exact
-      // scalar doubles, but a double SUM is partition-order-sensitive —
-      // fold in term order instead (collect the tiny per-doc term list,
-      // sort, left-fold). Bit-identical to DuckDB's
-      // list_dot_product(list(score ORDER BY term), ones) per the
-      // project's verified parity rule.
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("term"), col("term_score")))),
-        lit(0.0), (acc, x) => acc + x.getField("term_score")).as("bm25"))
+    idf * tfNorm
   }
+
+  /** The per-doc `bm25` aggregate over `(term, term_score)` rows.
+    * Deterministic accumulation: per-term scores are IEEE-exact scalar
+    * doubles, but a double SUM is partition-order-sensitive — fold in
+    * term order instead (collect the tiny per-doc term list, sort,
+    * left-fold). Bit-identical to DuckDB's
+    * list_dot_product(list(score ORDER BY term), ones) per the
+    * project's verified parity rule. */
+  private def foldTermScores: Column =
+    aggregate(
+      array_sort(collect_list(struct(col("term"), col("term_score")))),
+      lit(0.0), (acc, x) => acc + x.getField("term_score")).as("bm25")
 
   /** BM25 over prebuilt NON-denormalized index tables `(id, term, tf)` +
     * `(id, doclen)`, unlimited: every matching doc with its score. The

@@ -19,7 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object HybridSearch {
 
-  /** @param vector (keyCols..., score) vector-side hits
+  /** Precondition: at most one row per key on each side (a top-k list
+    * of distinct hits); a key repeated on one side would pair with every
+    * copy on the other. Two top-k inputs are single-partition already,
+    * so the join needs no exchange.
+    *
+    * @param vector (keyCols..., score) vector-side hits
     * @param fts    (keyCols..., score) text-side hits */
   def fuse(vector: DataFrame, fts: DataFrame, keyCols: Seq[String],
            boost: Double = 1.2): DataFrame = {

@@ -47,6 +47,42 @@ object MlQueries {
       IvfIndex.build(Tables.embeddings(s, d),
         "vec_id", "embedding", nCells, maxIter = 10))
 
+  /** q182's persisted 8-cell IVF index over `emb`, registered for
+    * `ann_topk`, and its path. The index is a build-once artifact keyed
+    * by the corpus stamp of `emb`: a run finding
+    * `<tmpdir>/graft-q182-ivf-<stamp>/_SUCCESS` reuses it (re-registering
+    * the saved centroids) instead of refitting k-means. A build writes
+    * to a unique scratch dir and renames it into place, so concurrent
+    * runs never read a half-written index; a run that loses the rename
+    * race drops its scratch and uses the winner's. */
+  private def ivfIndexFor(s: org.apache.spark.sql.SparkSession,
+                          emb: org.apache.spark.sql.DataFrame): String = {
+    val nCells = 8
+    val stamp = graft.util.DiskArtifact.corpusStamp(emb, "vec_id", "embedding")
+    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft-q182-ivf-$stamp")
+    if (!new java.io.File(root, "_SUCCESS").exists()) {
+      val scratch = new java.io.File(root.getParentFile,
+        s"${root.getName}.tmp-${java.util.UUID.randomUUID()}")
+      val idx = IvfIndex.build(emb, "vec_id", "embedding", nCells, cache = false)
+      idx.assigned.write.partitionBy("__cell")
+        .parquet(new java.io.File(scratch, "emb").getAbsolutePath)
+      s.createDataFrame(idx.model.clusterCenters.zipWithIndex.toSeq
+          .map { case (c, i) => (i, c.toArray.toSeq) })
+        .toDF("cell", "center")
+        .write.parquet(new java.io.File(scratch, "centers").getAbsolutePath)
+      new java.io.File(scratch, "_SUCCESS").createNewFile()
+      if (!scratch.renameTo(root))
+        org.apache.commons.io.FileUtils.deleteDirectory(scratch)
+    }
+    val idxPath = new java.io.File(root, "emb").getAbsolutePath
+    val centers = s.read.parquet(new java.io.File(root, "centers").getAbsolutePath)
+      .orderBy("cell").collect()
+      .map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
+    graft.plans.IvfRegistry.register(idxPath, centers, nProbe = nCells,
+      idCol = "vec_id", vecCol = "embedding")
+    idxPath
+  }
+
   /** The k=10 fit as DuckDB list literals — `(cid, [c0, c1, ...])` VALUES
     * rows. Available only AFTER the fit ran in this JVM: Verify dumps
     * `oracleSql` after executing every query, so by dump time the cache
@@ -174,13 +210,7 @@ object MlQueries {
         val emb = Tables.embeddings(s, d)
         val qv = emb.filter(col("vec_id") === 0)
           .select("embedding").head().getSeq[Float](0).toArray
-        // per-run scratch (the q180 precedent): concurrent suite runs
-        // must not race one fixed index dir
-        val idxRoot = java.nio.file.Files
-          .createTempDirectory("graft-q182-ivf").toFile
-        val idxPath = new java.io.File(idxRoot, "emb").getAbsolutePath
-        graft.operators.IvfIndex.persist(emb, "vec_id", "embedding",
-          nCells = 8, path = idxPath, nProbe = 8)
+        val idxPath = ivfIndexFor(s, emb)
         graft.plans.GraftSqlFunctions.registerOn(s)
         val qSql = qv.map(v => s"cast($v AS FLOAT)")
           .mkString("array(", ", ", ")")

@@ -171,6 +171,51 @@ class ServingSnapshotSpec extends SparkSpec {
     assert(warm === fresh(l))
   }
 
+  test("a warm search runs within its job ceiling: vector 2, fts 2, hybrid 3, and --expand builds lazily") {
+    val l = seeded("snap-ceiling")
+    l.removeDocumentFast(Library.docId("/snap/doc9.md")) // serve through tombstones too
+    answers(l) // opens the snapshot and resolves every lazy value
+    val Call = "graft.spec.call"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty(Call, "")).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    val ceiling = Map("vector" -> 2, "fts" -> 2, "search" -> 3, "search_tags" -> 3)
+    sc.addSparkListener(listener)
+    try {
+      Seq("marimba words", "number 3", "snapshot serving").foreach { q =>
+        val o = SearchOptions(limit = 5)
+        sc.setLocalProperty(Call, "build")
+        val frames = Seq(
+          "vector" -> l.vectorSearch(l.embedder.embed(q), o),
+          "fts" -> l.ftsSearch(q, o),
+          "search" -> l.search(q, o),
+          "search_tags" -> l.search(q, o.copy(tags = Seq("t2"))),
+          "search_expand" -> l.search(q, o.copy(expandContext = Some(300))))
+        frames.foreach(_._2.queryExecution.executedPlan)
+        frames.foreach { case (name, df) =>
+          sc.setLocalProperty(Call, s"$name/$q")
+          df.collect()
+        }
+      }
+    } finally {
+      sc.setLocalProperty(Call, null)
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val perCall = jobs.asScala.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(perCall.getOrElse("build", 0) === 0,
+      s"${perCall.getOrElse("build", 0)} Spark jobs ran while building warm searches")
+    perCall.foreach { case (call, n) =>
+      ceiling.get(call.takeWhile(_ != '/')).foreach(max =>
+        assert(n <= max, s"$call ran $n Spark jobs, over its ceiling of $max"))
+    }
+    assert(ceiling.keys.forall(op => perCall.keys.exists(_.startsWith(s"$op/"))))
+  }
+
   test("vector scores are exact cosines of the live embeddings") {
     val l = seeded("snap-exact")
     answers(l)
