@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Materialize.MatOps
+import Library.{OnDriver, OnSpark, TopK}
 
 /** The engine facade — the Spark-native equivalent of the reference's
   * `PDFLibrary` (/root/reference/src/index.ts). Owns a warehouse
@@ -213,15 +214,22 @@ class Library(val spark: SparkSession, val warehouse: String,
   private val pinned =
     new java.util.concurrent.atomic.AtomicReference[ServingSnapshot]()
 
+  /** Bytes of driver heap the serving tiers may hold: the in-process
+    * search tier ([[ServingSnapshot.inProcess]]) and the monolithic HNSW
+    * graph ([[loadHnsw]]) each load only within it. A fixed share of the
+    * heap; specs shrink it to drive the Spark paths. */
+  @volatile private[graft] var driverBudget: Long = ServingSnapshot.defaultBudget
+
   /** The snapshot searches read through: the pinned one while every
-    * served table's commit marker is unchanged, else a new one (see
-    * [[ServingSnapshot]]). */
+    * served table's commit marker and the driver budget are unchanged,
+    * else a new one (see [[ServingSnapshot]]). */
   private[graft] def serving(): ServingSnapshot = {
     val key = ServingSnapshot.probe(fs, warehouse)
+    val budget = driverBudget
     val cur = pinned.get
-    if (cur != null && cur.key == key) cur
+    if (cur != null && cur.key == key && cur.budget == budget) cur
     else {
-      val snap = new ServingSnapshot(spark, warehouse, key)
+      val snap = new ServingSnapshot(spark, warehouse, key, budget)
       pinned.set(snap)
       snap
     }
@@ -526,22 +534,28 @@ class Library(val spark: SparkSession, val warehouse: String,
     * through the snapshot's chunk directory ([[topHits]]), then read
     * content for the k survivors ([[withContent]]). Tag/threshold
     * filters apply below the top-k. */
-  def vectorSearch(queryVec: Array[Float], opts: SearchOptions): DataFrame =
-    vectorSearch(serving(), queryVec, opts)
-
-  private def vectorSearch(snap: ServingSnapshot, queryVec: Array[Float],
-                           opts: SearchOptions): DataFrame =
+  def vectorSearch(queryVec: Array[Float], opts: SearchOptions): DataFrame = {
+    val snap = serving()
     withContent(snap, vectorTopK(snap, queryVec, opts), opts.limit)
+  }
+
+  private def frame(t: TopK): DataFrame = t match {
+    case OnDriver(hits) => DriverSearch.narrowFrame(spark, hits)
+    case OnSpark(df) => df
+  }
 
   private def vectorTopK(snap: ServingSnapshot, queryVec: Array[Float],
-                         opts: SearchOptions): DataFrame = {
-    val base = ivfScored(snap, queryVec).getOrElse(snap.embeddingsRaw)
-    val scored = base.select(col("chunkId"),
-      VectorFunctions.distToScore(lit(1.0) -
-        graft.plans.CosineSimilarity(col("embedding"),
-          VectorSearch.queryVec(queryVec.toSeq))).as("score"))
-    rankAnnHits(snap, scored, opts)
-  }
+                         opts: SearchOptions): TopK =
+    if (snap.inProcess) OnDriver(DriverSearch.rank(snap,
+      DriverSearch.scan(snap, queryVec), opts, opts.threshold, "vector"))
+    else {
+      val base = ivfScored(snap, queryVec).getOrElse(snap.embeddingsRaw)
+      val scored = base.select(col("chunkId"),
+        VectorFunctions.distToScore(lit(1.0) -
+          graft.plans.CosineSimilarity(col("embedding"),
+            VectorSearch.queryVec(queryVec.toSeq))).as("score"))
+      OnSpark(rankAnnHits(snap, scored, opts))
+    }
 
   /** The ranked top-k of a scored `(chunkId, score)` candidate frame,
     * narrow: `(chunkId, docId, title, page, chunkIndex, score,
@@ -563,18 +577,22 @@ class Library(val spark: SparkSession, val warehouse: String,
       .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
       .limit(opts.limit)
 
-  /** The search output contract for `k` ranked narrow rows in
-    * [[topHits]]'s shape: content is read once, for the ranked rows only,
-    * by a join that broadcasts them against the physical `chunks` table
-    * (the ranked ids are live). */
-  private def withContent(snap: ServingSnapshot, ranked: DataFrame,
-                          k: Int): DataFrame =
-    snap.chunksRaw.select(col("id").as("chunkId"), col("content"))
-      .join(broadcast(ranked), Seq("chunkId"))
-      .select(col("docId"), col("title"), col("page"), col("chunkIndex"),
-        col("content"), col("score"), col("matchType"))
-      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
-      .limit(k)
+  /** The search output contract for `k` ranked narrow rows: on the
+    * driver from the snapshot's content, or on Spark by a join that
+    * broadcasts the ranked rows against the physical `chunks` table (the
+    * ranked ids are live), so content is read for the ranked rows only. */
+  private def withContent(snap: ServingSnapshot, ranked: TopK,
+                          k: Int): DataFrame = ranked match {
+    case OnDriver(hits) =>
+      DriverSearch.outputFrame(spark, DriverSearch.withContent(snap, hits, k))
+    case OnSpark(df) =>
+      snap.chunksRaw.select(col("id").as("chunkId"), col("content"))
+        .join(broadcast(df), Seq("chunkId"))
+        .select(col("docId"), col("title"), col("page"), col("chunkIndex"),
+          col("content"), col("score"), col("matchType"))
+        .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
+        .limit(k)
+  }
 
   // ------------------------------------------------------------ HNSW index
 
@@ -965,7 +983,7 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   private def shardedTopK(snap: ServingSnapshot, queryVec: Array[Float],
                           opts: SearchOptions, nProbe: Int,
-                          ef: Int): DataFrame =
+                          ef: Int): TopK =
     loadSharded() match {
       case None => vectorTopK(snap, queryVec, opts)
       case Some(sh) =>
@@ -1049,9 +1067,9 @@ class Library(val spark: SparkSession, val warehouse: String,
         // point is sublinear serving, and a wide-vector corpus scan
         // for id mapping would defeat it (the ids table is ~16x
         // narrower than embeddings at dim 64, more at real dims)
-        rankAnnHits(snap,
+        OnSpark(rankAnnHits(snap,
           scored.join(snap.shardedIds, Seq("id")).select("chunkId", "score"),
-          opts)
+          opts))
     }
 
   /** Centroid-drift watermark reading for the sharded serving tier
@@ -1155,14 +1173,13 @@ class Library(val spark: SparkSession, val warehouse: String,
     * #5): [[loadHnsw]] rebuilds the whole graph from a driver-side
     * collect of every live embedding — the documented ONE-JVM tier. At
     * the reference's 48 GB index shape that collect is a driver OOM,
-    * so past `spark.graft.hnswDriverMaxRows` (default 2M rows) the
+    * so when the live rows' vectors would exceed [[driverBudget]] the
     * tier refuses to load and serving degrades LOUDLY to the exact
     * scan (a stderr warning, not an OOM mid-collect). The count is
     * parquet-metadata-cheap. Use [[enableShardedServing]] past the
     * budget — that tier's per-executor bound is its largest shard. */
   private def hnswWithinDriverBudget(): Boolean = {
-    val budget = spark.conf
-      .get("spark.graft.hnswDriverMaxRows", "2000000").toLong
+    val budget = driverBudget
     // memoize the verdict until the next ingest/compaction invalidates
     // it (ADVICE r19): without this, an over-budget corpus re-ran the
     // count job AND re-printed the warning once per query
@@ -1170,13 +1187,14 @@ class Library(val spark: SparkSession, val warehouse: String,
       case Some((b, ok)) if b == budget => ok
       case _ =>
         val live = spark.read.parquet(path("embeddings")).count()
-        val ok = live <= budget
+        val bytes = live * ServingSnapshot.vectorBytes(embedder.dim)
+        val ok = bytes <= budget
         if (!ok)
           System.err.println(
-            s"[graft] monolithic HNSW tier refused: $live embeddings exceed " +
-              s"spark.graft.hnswDriverMaxRows=$budget (a driver-side " +
-              "rebuild would OOM) — serving the exact scan; use " +
-              "enableShardedServing for graph ANN at this scale")
+            s"[graft] monolithic HNSW tier refused: $live embeddings need " +
+              s"$bytes bytes, over the driver budget of $budget (a " +
+              "driver-side rebuild would OOM) — serving the exact scan; " +
+              "use enableShardedServing for graph ANN at this scale")
         hnswBudgetVerdict = Some((budget, ok))
         ok
     }
@@ -1228,7 +1246,7 @@ class Library(val spark: SparkSession, val warehouse: String,
   }
 
   private def hnswTopK(snap: ServingSnapshot, queryVec: Array[Float],
-                       opts: SearchOptions, ef: Int): DataFrame =
+                       opts: SearchOptions, ef: Int): TopK =
     loadHnsw() match {
       case None => vectorTopK(snap, queryVec, opts)
       case Some((g, cids)) =>
@@ -1236,7 +1254,10 @@ class Library(val spark: SparkSession, val warehouse: String,
           .searchKnn(g, queryVec, math.max(opts.limit * 2, 16),
             math.max(ef, opts.limit * 2))
           .map { case (sid, d) => (cids(sid.toInt), 1.0 - d / 2.0) }
-        rankAnnHits(snap, hits.toSeq.toDF("chunkId", "score"), opts)
+        if (snap.inProcess) OnDriver(DriverSearch.rank(snap,
+          hits.iterator.map { case (c, s) => c -> java.lang.Double.valueOf(s) },
+          opts, opts.threshold, "vector"))
+        else OnSpark(rankAnnHits(snap, hits.toSeq.toDF("chunkId", "score"), opts))
     }
 
   /** Serving auto-dispatch (VERDICT r17 #8): route a vector query to
@@ -1261,7 +1282,7 @@ class Library(val spark: SparkSession, val warehouse: String,
 
   private def annTopK(snap: ServingSnapshot, queryVec: Array[Float],
                       opts: SearchOptions, nProbe: Int,
-                      ef: Int): DataFrame =
+                      ef: Int): TopK =
     if (snap.shardedTier) shardedTopK(snap, queryVec, opts, nProbe, ef)
     else if (snap.hnswTier) hnswTopK(snap, queryVec, opts, ef)
     else vectorTopK(snap, queryVec, opts)
@@ -1413,7 +1434,14 @@ class Library(val spark: SparkSession, val warehouse: String,
   }
 
   private def ftsTopK(snap: ServingSnapshot, query: String,
-                      opts: SearchOptions): DataFrame = {
+                      opts: SearchOptions): TopK =
+    if (snap.inProcess && snap.ftsPostings.isDefined)
+      OnDriver(DriverSearch.rank(snap, DriverSearch.bm25(snap, query), opts,
+        None, "fts"))
+    else OnSpark(ftsTopKOnSpark(snap, query, opts))
+
+  private def ftsTopKOnSpark(snap: ServingSnapshot, query: String,
+                             opts: SearchOptions): DataFrame = {
     val terms = query.toLowerCase(java.util.Locale.ROOT)
       .split("\\s+").filter(_.nonEmpty).toSeq
     // FTS5 semantics: score globally, apply predicates (tags), THEN
@@ -1450,29 +1478,41 @@ class Library(val spark: SparkSession, val warehouse: String,
     val vec = annTopK(snap, embedder.embed(query), opts, nProbe = -1, ef = 64)
     val ranked =
       if (!opts.hybrid) vec
-      else {
-        def leg(df: DataFrame, side: String) =
-          df.select(col("docId"), col("page"), col("chunkIndex"),
-            col("chunkId").as(s"${side}_chunkId"),
-            col("title").as(s"${side}_title"), col("score"))
-        // an fts-only hit must arrive complete (the reference appends
-        // fts results whole): its id and title come from the fts leg
-        HybridSearch.fuseTopK(leg(vec, "v"), leg(ftsTopK(snap, query, opts), "f"),
-          Seq("docId", "page", "chunkIndex"), opts.limit)
-          .select(coalesce(col("v_chunkId"), col("f_chunkId")).as("chunkId"),
-            col("docId"), coalesce(col("v_title"), col("f_title")).as("title"),
-            col("page"), col("chunkIndex"), col("score"),
-            col("match_type").as("matchType"))
+      else (vec, ftsTopK(snap, query, opts)) match {
+        case (OnDriver(v), OnDriver(f)) => OnDriver(DriverSearch.fuse(v, f, opts.limit))
+        case (v, f) =>
+          def leg(t: TopK, side: String) =
+            frame(t).select(col("docId"), col("page"), col("chunkIndex"),
+              col("chunkId").as(s"${side}_chunkId"),
+              col("title").as(s"${side}_title"), col("score"))
+          // an fts-only hit must arrive complete (the reference appends
+          // fts results whole): its id and title come from the fts leg
+          OnSpark(HybridSearch.fuseTopK(leg(v, "v"), leg(f, "f"),
+            Seq("docId", "page", "chunkIndex"), opts.limit)
+            .select(coalesce(col("v_chunkId"), col("f_chunkId")).as("chunkId"),
+              col("docId"), coalesce(col("v_title"), col("f_title")).as("title"),
+              col("page"), col("chunkIndex"), col("score"),
+              col("match_type").as("matchType")))
       }
     // reference --expand flag: replace each hit's content with the
     // budget-bounded neighborhood (one set-based join for all hits)
     opts.expandContext match {
       case None => withContent(snap, ranked, opts.limit)
       case Some(maxChars) =>
-        val hits = ranked.select(col("docId"), col("title"), col("page"),
+        val window = 32
+        // ranked on the driver: the rows and their neighbourhoods come
+        // from its memory as single partitions, so the join, the fold
+        // and the sort below need no exchange
+        val (ranks, chunks) = ranked match {
+          case OnDriver(h) => (frame(ranked).coalesce(1),
+            DriverSearch.neighbourhood(spark, snap, h, window).coalesce(1))
+          case OnSpark(df) => (df, snap.chunks)
+        }
+        val hits = ranks.select(col("docId"), col("title"), col("page"),
           col("chunkIndex"), col("score"), col("matchType"))
-        val expanded = expandContext(snap,
-          hits.select(col("docId"), col("chunkIndex")), maxChars, window = 32)
+        val expanded = ContextExpansion.expand(
+          hits.select(col("docId"), col("chunkIndex")), chunks, "docId",
+          "chunkIndex", "content", window, maxChars)
           .select(col("doc").as("docId"), col("hit_idx").as("chunkIndex"),
             col("context"), col("start_index"), col("end_index"))
         hits.join(expanded, Seq("docId", "chunkIndex"), "left_outer")
@@ -1487,11 +1527,7 @@ class Library(val spark: SparkSession, val warehouse: String,
     * with MinChunkChars ~20 a 600-char budget can admit ~30 chunks, so
     * the candidate window must not bind before the budget does. */
   def expandContext(hits: DataFrame, maxChars: Int, window: Int = 32): DataFrame =
-    expandContext(serving(), hits, maxChars, window)
-
-  private def expandContext(snap: ServingSnapshot, hits: DataFrame,
-                            maxChars: Int, window: Int): DataFrame =
-    ContextExpansion.expand(hits, snap.chunks, "docId", "chunkIndex",
+    ContextExpansion.expand(hits, serving().chunks, "docId", "chunkIndex",
       "content", window, maxChars)
 
   // ------------------------------------------------------- RAPTOR (M1-M7)
@@ -1549,27 +1585,31 @@ class Library(val spark: SparkSession, val warehouse: String,
   def multiScaleSearch(query: String, opts: SearchOptions = SearchOptions()): DataFrame = {
     val qv = embedder.embed(query)
     val snap = serving()
-    val chunkHits = vectorSearch(snap, qv, opts)
-    val summaryScored = snap.clusterSummaries
-      .withColumn("score",
-        VectorFunctions.distToScore(lit(1.0) -
-          graft.plans.CosineSimilarity(col("embedding"),
-            VectorSearch.queryVec(qv.toSeq))))
-    // the threshold applies to BOTH scales — chunk hits get it inside
-    // vectorSearch; without this, sub-threshold summaries could occupy
-    // top-k slots the caller explicitly excluded
-    val summaryHits = opts.threshold
-      .map(t => summaryScored.filter(col("score") >= t))
-      .getOrElse(summaryScored)
-      .select(lit("").as("docId"), lit("Cluster Summary").as("title"),
-        lit(0).as("page"), col("clusterId").as("chunkIndex"),
-        col("summary").as("content"), col("score"),
-        lit("cluster").as("matchType"))
-      .orderBy(desc("score"), asc("chunkIndex"))
-      .limit(opts.limit)
-    chunkHits.unionByName(summaryHits)
-      .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
-      .limit(opts.limit)
+    if (snap.inProcess)
+      DriverSearch.outputFrame(spark, DriverSearch.multiScale(snap, qv, opts))
+    else {
+      val chunkHits = withContent(snap, vectorTopK(snap, qv, opts), opts.limit)
+      val summaryScored = snap.clusterSummaries
+        .withColumn("score",
+          VectorFunctions.distToScore(lit(1.0) -
+            graft.plans.CosineSimilarity(col("embedding"),
+              VectorSearch.queryVec(qv.toSeq))))
+      // the threshold applies to BOTH scales — chunk hits get it inside
+      // vectorSearch; without this, sub-threshold summaries could occupy
+      // top-k slots the caller explicitly excluded
+      val summaryHits = opts.threshold
+        .map(t => summaryScored.filter(col("score") >= t))
+        .getOrElse(summaryScored)
+        .select(lit("").as("docId"), lit("Cluster Summary").as("title"),
+          lit(0).as("page"), col("clusterId").as("chunkIndex"),
+          col("summary").as("content"), col("score"),
+          lit("cluster").as("matchType"))
+        .orderBy(desc("score"), asc("chunkIndex"))
+        .limit(opts.limit)
+      chunkHits.unionByName(summaryHits)
+        .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
+        .limit(opts.limit)
+    }
   }
 
   // ------------------------------------------------------------- doc ops
@@ -1794,6 +1834,12 @@ class Library(val spark: SparkSession, val warehouse: String,
 }
 
 object Library {
+  /** A ranked narrow top-k in `topHits`'s shape: rows an in-process
+    * snapshot ranked on the driver, or a Spark plan. */
+  private sealed trait TopK
+  private final case class OnDriver(hits: Seq[DriverSearch.Hit]) extends TopK
+  private final case class OnSpark(df: DataFrame) extends TopK
+
   /** `df` without the rows whose `key` is in the tombstone ids `tombs`
     * (a broadcast anti-join; `df` itself when there are none). */
   private[graft] def antiTomb(df: DataFrame, key: String,

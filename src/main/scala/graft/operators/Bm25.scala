@@ -192,6 +192,18 @@ object Bm25 {
     idf * tfNorm
   }
 
+  /** [[termScore]] for one row on the driver: the same operations in the
+    * same order, and `StrictMath.log` as Spark's `log` uses, so the
+    * same bits. */
+  def termScore(n: Long, avgdl: Double, df: Long, tf: Long,
+                doclen: Long): Double = {
+    val idf = StrictMath.log(1.0 +
+      (n.toDouble - df.toDouble + 0.5) / (df.toDouble + 0.5))
+    val tfNorm = (tf.toDouble * (K1 + 1)) /
+      (tf.toDouble + K1 * ((1 - B) + B * doclen.toDouble / avgdl))
+    idf * tfNorm
+  }
+
   /** The per-doc `bm25` aggregate over `(term, term_score)` rows.
     * Deterministic accumulation: per-term scores are IEEE-exact scalar
     * doubles, but a double SUM is partition-order-sensitive — fold in

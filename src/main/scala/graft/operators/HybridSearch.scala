@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   * wide shuffle regardless of corpus size.
   */
 object HybridSearch {
+  /** The reference's both-sources boost. */
+  val Boost = 1.2
 
   /** Precondition: at most one row per key on each side (a top-k list
     * of distinct hits); a key repeated on one side would pair with every
@@ -27,7 +29,7 @@ object HybridSearch {
     * @param vector (keyCols..., score) vector-side hits
     * @param fts    (keyCols..., score) text-side hits */
   def fuse(vector: DataFrame, fts: DataFrame, keyCols: Seq[String],
-           boost: Double = 1.2): DataFrame = {
+           boost: Double = Boost): DataFrame = {
     val v = vector.withColumnRenamed("score", "vec_score")
     val f = fts.withColumnRenamed("score", "fts_score")
     v.join(f, keyCols, "full_outer")
@@ -45,7 +47,7 @@ object HybridSearch {
   /** Fuse and return the final ranked top-k (reference K5:
     * src/index.ts:351-353). */
   def fuseTopK(vector: DataFrame, fts: DataFrame, keyCols: Seq[String],
-               k: Int, boost: Double = 1.2): DataFrame =
+               k: Int, boost: Double = Boost): DataFrame =
     fuse(vector, fts, keyCols, boost)
       .orderBy(desc("score") +: keyCols.map(asc): _*)
       .limit(k)

@@ -43,16 +43,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData].toFloatArray()
     val y = b.asInstanceOf[ArrayData].toFloatArray()
-    if (x.length != y.length) return null
-    val n = x.length
-    var dot = 0.0; var nx = 0.0; var ny = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x(i).toDouble; val yi = y(i).toDouble
-      dot += xi * yi; nx += xi * xi; ny += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
+    if (x.length != y.length) null else CosineSimilarity.cosine(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -86,6 +77,21 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** The cosine of two equal-length vectors: the loop the generated code
+    * runs, and the one driver-side scoring shares, so both give the
+    * same bits. NaN when either vector is all zeros. */
+  def cosine(x: Array[Float], y: Array[Float]): Double = {
+    val n = x.length
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x(i).toDouble; val yi = y(i).toDouble
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
+
   /** Column API entry. */
   def apply(a: Column, b: Column): Column =
     GraftBridge.column(CosineSimilarity(

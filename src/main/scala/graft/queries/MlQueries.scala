@@ -611,12 +611,7 @@ object MlQueries {
       FROM (SELECT * FROM fused ORDER BY score DESC, docId, chunkIndex LIMIT 12) t
       ORDER BY round(score, 6) DESC, docId, chunkIndex"""},
       (s, d) => {
-        val wh = multiScaleWarehouse(s, d)
-        val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0).toArray
-        val lib = new graft.Library(s, wh, new FixedEmbedder(qv))
-        lib.multiScaleSearch("raptor multi-scale probe",
-            graft.model.SearchOptions(limit = 12, threshold = Some(0.5)))
+        multiScaleSearch(multiScaleLibrary(s, d))
           .select(col("docId"), col("title"), col("page"), col("chunkIndex"),
             col("content"), round(col("score"), 6).as("score"), col("matchType"))
           .orderBy(desc("score"), asc("docId"), asc("chunkIndex"))
@@ -1567,6 +1562,20 @@ object MlQueries {
     val fits = bpeCache.snapshot().toSeq
     if (fits.size != 1) None else Some(fits.head._2)
   }
+
+  /** q76's `Library` over [[multiScaleWarehouse]], embedding every query
+    * as the testdata's query row. */
+  private[graft] def multiScaleLibrary(s: org.apache.spark.sql.SparkSession,
+                                       d: String): graft.Library = {
+    val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
+      .select("embedding").head().getSeq[Float](0).toArray
+    new graft.Library(s, multiScaleWarehouse(s, d), new FixedEmbedder(qv))
+  }
+
+  /** q76's call. */
+  private[graft] def multiScaleSearch(lib: graft.Library) =
+    lib.multiScaleSearch("raptor multi-scale probe",
+      graft.model.SearchOptions(limit = 12, threshold = Some(0.5)))
 
   /** Embeds every query as one fixed vector — the q76 bridge between
     * multiScaleSearch's text API and the testdata's pre-embedded query

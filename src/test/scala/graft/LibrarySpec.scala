@@ -112,20 +112,22 @@ class LibrarySpec extends SparkSpec {
       ("/b.md", "# B\n" + ("tangerine words fill this other document fully. " * 10))).toDS())
     // results must be identical with and without the persisted index
     val opts = SearchOptions(limit = 5)
-    val fallback = l.ftsSearch("kumquat document", opts).collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("docId"), r.getAs[Int]("chunkIndex"),
         r.getAs[Double]("score"))).toSeq
+    val fallback = rows(l.ftsSearch("kumquat document", opts))
     l.rebuildFtsIndex()
-    val probe = l.ftsSearch("kumquat document", opts)
-    val indexed = probe.collect()
-      .map(r => (r.getAs[String]("docId"), r.getAs[Int]("chunkIndex"),
-        r.getAs[Double]("score"))).toSeq
-    assert(indexed === fallback)
-    // the probe scan must be pruned on the __tb hive partition — the
+    assert(rows(l.ftsSearch("kumquat document", opts)) === fallback)
+    // over the driver budget the probe scans the postings on Spark, and
+    // that scan must be pruned on the __tb hive partition — the
     // docstring's "term-bucketed at scale" promise, asserted
+    l.driverBudget = 0L
+    val probe = l.ftsSearch("kumquat document", opts)
+    assert(rows(probe) === fallback)
     val p = probe.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [__tb"),
       s"postings probe not partition-pruned:\n$p")
+    l.driverBudget = ServingSnapshot.defaultBudget
     // append path keeps the layout: new terms remain findable
     l.addMarkdown(Seq(
       ("/c.md", "# C\n" + ("persimmon content arrives after the build. " * 10))).toDS())

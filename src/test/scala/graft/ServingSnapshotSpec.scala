@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 /** A `Library` serves searches from a pinned [[ServingSnapshot]]. These
   * specs pin the two halves of that contract: a search issued after any
   * write sees the write (its results equal a cold `Library` on the same
-  * warehouse), and a warm search runs no Spark job before its final
-  * action. */
+  * warehouse), and a warm search runs no Spark job at all when the
+  * warehouse fits the driver budget, and none before its final action
+  * when it does not. Every write-visibility spec runs on both paths. */
 class ServingSnapshotSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,16 +47,36 @@ class ServingSnapshotSpec extends SparkSpec {
 
   private def fresh(l: Library) = answers(new Library(spark, l.warehouse))
 
-  /** Pin a snapshot, run `write`, then search the same `Library`. A
-    * write that `changes` no result must still be seen: a stale
-    * snapshot would list files the write replaced and fail the read. */
+  /** A second `Library` on `l`'s warehouse with no driver budget: it
+    * serves every search on the Spark path. */
+  private def onSpark(l: Library): Library = {
+    val s = new Library(spark, l.warehouse)
+    s.driverBudget = 0L
+    s
+  }
+
+  /** `l` (in-process) and its [[onSpark]] twin, each checked to serve
+    * on the path it names. */
+  private def bothPaths(l: Library): Seq[Library] = {
+    val sides = Seq(l, onSpark(l))
+    assert(sides.map(_.serving().inProcess) === Seq(true, false))
+    sides
+  }
+
+  /** Pin a snapshot on both paths, run `write`, then search the same
+    * `Library`s. A write that `changes` no result must still be seen: a
+    * stale snapshot would list files the write replaced and fail the
+    * read. */
   private def seesWrite(l: Library, changes: Boolean = true)(write: => Unit): Unit = {
-    val before = answers(l)
-    assert(l.serving() eq l.serving(), "an unchanged warehouse re-opened its snapshot")
+    val sides = bothPaths(l)
+    val before = sides.map(answers)
+    sides.foreach(s => assert(s.serving() eq s.serving(),
+      "an unchanged warehouse re-opened its snapshot"))
     write
-    val after = answers(l)
-    assert(after === fresh(l), "a search after the write served a stale snapshot")
-    if (changes) assert(after !== before, "the write changed no result, so it proves nothing")
+    val after = sides.map(answers)
+    val want = fresh(l)
+    after.foreach(a => assert(a === want, "a search after the write served a stale snapshot"))
+    if (changes) assert(after.head !== before.head, "the write changed no result, so it proves nothing")
   }
 
   private def ftsDocs(l: Library, q: String): Seq[String] =
@@ -93,12 +114,14 @@ class ServingSnapshotSpec extends SparkSpec {
     val l = seeded("snap-compact")
     l.removeDocumentFast(Library.docId("/snap/doc5.md"))
     l.removeDocumentFast(Library.docId("/snap/doc8.md"))
+    val sides = bothPaths(l)
     val before = answers(l)
+    sides.foreach(s => assert(answers(s) === before))
     l.compactTombstones()
     assert(!new java.io.File(s"${l.warehouse}/tombstones").exists())
     // compaction changes no visible row: the hidden docs were hidden
     // before; what must hold is that the re-listed leaves serve
-    assert(answers(l) === before)
+    sides.foreach(s => assert(answers(s) === before))
     assert(answers(l) === fresh(l))
   }
 
@@ -118,11 +141,12 @@ class ServingSnapshotSpec extends SparkSpec {
     fs.mkdirs(new HPath(s"$wh/embeddings_ivf_swap_old"))
     assert(fs.rename(new HPath(s"$wh/embeddings_ivf/__cell=0"),
       new HPath(s"$wh/embeddings_ivf_swap_old/__cell=0")))
-    val stranded = answers(l)
+    val sides = bothPaths(l)
+    val stranded = sides.map(answers)
     l.repair() // restores the leaf: the files are back, the marker moves
-    val repaired = answers(l)
-    assert(repaired === fresh(l))
-    assert(repaired !== stranded)
+    val repaired = sides.map(answers)
+    repaired.foreach(r => assert(r === fresh(l)))
+    assert(repaired.head !== stranded.head)
   }
 
   test("a write through a second Library instance is seen by the first") {
@@ -135,6 +159,7 @@ class ServingSnapshotSpec extends SparkSpec {
   test("a warm search runs no Spark job before its final action, and matches a cold Library") {
     val l = seeded("snap-jobs")
     l.removeDocumentFast(Library.docId("/snap/doc9.md")) // serve through tombstones too
+    l.driverBudget = 0L // the Spark path: within the budget no job runs at all
     val warm = answers(l) // opens the snapshot and resolves every lazy value
     val Phase = "graft.spec.phase"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -174,6 +199,7 @@ class ServingSnapshotSpec extends SparkSpec {
   test("a warm search runs within its job ceiling: vector 2, fts 2, hybrid 3, and --expand builds lazily") {
     val l = seeded("snap-ceiling")
     l.removeDocumentFast(Library.docId("/snap/doc9.md")) // serve through tombstones too
+    l.driverBudget = 0L // the Spark path: within the budget no job runs at all
     answers(l) // opens the snapshot and resolves every lazy value
     val Call = "graft.spec.call"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -214,6 +240,98 @@ class ServingSnapshotSpec extends SparkSpec {
         assert(n <= max, s"$call ran $n Spark jobs, over its ceiling of $max"))
     }
     assert(ceiling.keys.forall(op => perCall.keys.exists(_.startsWith(s"$op/"))))
+  }
+
+  /** The Spark jobs each call of `calls` starts, by call name, from the
+    * call itself to the end of its `collect`. */
+  private def jobsPerCall(calls: Seq[(String, () => org.apache.spark.sql.DataFrame)]): Map[String, Int] = {
+    val Call = "graft.spec.call"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty(Call, "")).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try calls.foreach { case (name, call) =>
+      sc.setLocalProperty(Call, name)
+      val df = call()
+      df.queryExecution.executedPlan
+      df.collect()
+    } finally {
+      sc.setLocalProperty(Call, null)
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    calls.map(_._1).map(c => c -> jobs.asScala.count(_ == c)).toMap
+  }
+
+  test("within the driver budget a warm search runs no Spark job at all, and --expand fewer than 8") {
+    val l = seeded("snap-inprocess")
+    l.removeDocumentFast(Library.docId("/snap/doc9.md")) // serve through tombstones too
+    l.buildClusterSummaries(3)
+    assert(l.serving().inProcess)
+    def calls(q: String) = {
+      val o = SearchOptions(limit = 5)
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        s"vector/$q" -> (() => l.vectorSearch(l.embedder.embed(q), o)),
+        s"fts/$q" -> (() => l.ftsSearch(q, o)),
+        s"search/$q" -> (() => l.search(q, o)),
+        s"search_tags/$q" -> (() => l.search(q, o.copy(tags = Seq("t2")))),
+        s"multiscale/$q" -> (() => l.multiScaleSearch(q, o)),
+        s"search_expand/$q" -> (() => l.search(q, o.copy(expandContext = Some(300)))))
+    }
+    jobsPerCall(calls("warm up")) // loads the tier
+    val perCall = Seq("marimba words", "number 3", "snapshot serving")
+      .flatMap(q => jobsPerCall(calls(q)))
+    perCall.foreach { case (call, n) =>
+      if (call.startsWith("search_expand/"))
+        assert(n > 0 && n < 8, s"$call ran $n Spark jobs")
+      else assert(n === 0, s"$call ran $n Spark jobs within the driver budget")
+    }
+    // the same rows as the Spark path
+    assert(answers(l) === answers(onSpark(l)))
+  }
+
+  test("an over-budget snapshot collects no vectors, postings or content to the driver") {
+    val l = seeded("snap-over")
+    l.removeDocumentFast(Library.docId("/snap/doc9.md"))
+    l.buildClusterSummaries(3)
+    val over = onSpark(l)
+    val returned = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.sql.execution.QueryExecution]
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = ran.add(qe)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ran.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val q = "marimba number 7"
+      val o = SearchOptions(limit = 5)
+      Seq(over.vectorSearch(over.embedder.embed(q), o), over.ftsSearch(q, o),
+        over.search(q, o), over.search(q, o.copy(expandContext = Some(300))),
+        over.multiScaleSearch(q, o)).foreach { df =>
+        returned += df.queryExecution
+        df.collect()
+      }
+    } finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(!over.serving().inProcess && over.serving().content.isEmpty)
+    import scala.jdk.CollectionConverters._
+    val loads = ran.asScala.toSeq.filterNot(qe => returned.exists(_ eq qe))
+    assert(loads.nonEmpty, "the listener saw no snapshot load")
+    loads.foreach { qe =>
+      val cols = qe.analyzed.output.map(_.name)
+      assert(Seq("embedding", "term", "content").forall(c => !cols.contains(c)),
+        s"an over-budget snapshot collected ${cols.mkString(", ")}")
+    }
   }
 
   test("vector scores are exact cosines of the live embeddings") {

@@ -230,14 +230,12 @@ class HnswSpec extends SparkSpec {
     // shrink the budget below the corpus: a FRESH library (cold cache)
     // must refuse the driver-side rebuild and serve the exact rows —
     // through hnswSearch AND the annSearch dispatch
-    spark.conf.set("spark.graft.hnswDriverMaxRows", "1")
-    try {
-      val over = new graft.Library(spark, wh)
-      val exact = rows(over.vectorSearch(qv, opts))
-      assert(rows(over.hnswSearch(qv, opts)) === exact)
-      assert(rows(over.annSearch(qv, opts)) === exact)
-    } finally spark.conf.unset("spark.graft.hnswDriverMaxRows")
-    // budget restored: the tier loads again (nothing was dropped)
+    val over = new graft.Library(spark, wh)
+    over.driverBudget = 1L
+    val exact = rows(over.vectorSearch(qv, opts))
+    assert(rows(over.hnswSearch(qv, opts)) === exact)
+    assert(rows(over.annSearch(qv, opts)) === exact)
+    // default budget: the tier loads again (nothing was dropped)
     val back = new graft.Library(spark, wh)
     assert(rows(back.hnswSearch(qv, opts)).nonEmpty)
   }

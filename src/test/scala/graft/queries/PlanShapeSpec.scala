@@ -262,11 +262,22 @@ class PlanShapeSpec extends SparkSpec {
   test("q76: multi-scale fusion stays TakeOrdered + broadcast-joined, no cross product") {
     val df = SparkEntry.queries("q76_multiscale_search")(spark, sf)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    // q76's warehouse fits the driver: both scales' top-k and the fusion
+    // ran there, and the query reads the fused rows as a local relation
+    val served = df.queryExecution.executedPlan.toString
+    assert(served.contains("LocalTableScan") && !served.contains("FileScan"),
+      "the in-process fusion must reach the query as local rows:\n" + served)
+    // over the driver budget the same call plans on Spark
+    val lib = graft.queries.MlQueries.multiScaleLibrary(spark, sf)
+    lib.driverBudget = 0L
+    val spark0 = graft.queries.MlQueries.multiScaleSearch(lib)
+    spark0.collect()
+    val p = spark0.queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       "both scales' top-k must compile to TakeOrderedAndProject:\n" + p)
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      "multi-scale fusion must stay equi-join-only:\n" + p)
+    Seq(served, p).foreach(plan =>
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        "multi-scale fusion must stay equi-join-only:\n" + plan))
   }
 
   test("q86: langid plans with NO shuffle — map-only over the scan") {
