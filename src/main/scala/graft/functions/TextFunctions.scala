@@ -32,9 +32,11 @@ object TextFunctions {
     "can", "just", "should", "now", "pdf", "ebook", "edition", "book")
 
   /** Whitespace tokenization with empty-token removal. Matches the SQL
-    * `string_split(text, ' ')` + non-empty filter exactly. */
+    * `string_split(text, ' ')` + non-empty filter exactly: `split` never
+    * yields a NULL element, so removing "" is that filter, without the
+    * interpreted lambda. */
   def tokens(text: Column): Column =
-    filter(split(text, " "), t => length(t) > 0)
+    array_remove(split(text, " "), "")
 
   /** Distinct non-empty lowercase tokens — the word *set* for Jaccard. */
   def tokenSet(text: Column): Column = array_distinct(tokens(lower(text)))

@@ -276,15 +276,19 @@ object TextAnalysis {
     * its full extent; substrings shorter than k are below the dedup
     * threshold by definition (Lee et al. use k = 50).
     *
-    * Shape at scale: one map-only posexplode emits (id, pos, gramKey) —
-    * the dominant shuffle, ~(n−k+1) fixed-width rows per doc; the hot
-    * set is map-side-combined and bounded by totalGrams/minCount
-    * (broadcast back by default; pass `broadcastHot = false` for a
-    * small minCount over a 100 TB crawl — the honest shuffle fallback).
-    * The per-doc merge is ONE groupBy(id) whose collect_list is bounded
-    * by a single document's hot-gram count, folded to disjoint spans by
-    * an `aggregate` HOF — no Window, no sort beyond the per-group
-    * array_sort. Removal semantics, caller's choice:
+    * Shape at scale: one map-only pass emits each window's md5 digest
+    * as two longs ([[graft.plans.WindowDigests]]) into ONE
+    * map-side-combined aggregate — the only shuffle, 16-byte keys. The
+    * hot set (keys occurring ≥ minCount times) is bounded by
+    * totalGrams/minCount; by default it is collected once and every
+    * document is scored map-only against it
+    * ([[graft.plans.DupSpanScore]]: window hits, the keepFirst
+    * exemption, the span fold and the cleaned text in one pass over the
+    * row). Pass `broadcastHot = false` for a small minCount over a
+    * 100 TB crawl: the hits then reach their documents through a
+    * shuffle join on the digest pair and one groupBy(id), and the same
+    * fold kernel ([[graft.plans.DupSpanFold]]) scores them. No Window,
+    * no sort. Removal semantics, caller's choice:
     *   - `keepFirst = false` (default): ALL copies of a duplicated
     *     span are dropped — deterministic and order-free.
     *   - `keepFirst = true`: Lee et al.'s own semantic — one canonical
@@ -295,8 +299,12 @@ object TextAnalysis {
     *     to an OVERLAPPING gram's non-canonical window; coverage stays
     *     the deterministic union of non-exempt windows.
     *
-    * Grams are keyed by their full 128-bit md5 hex digest: cross-engine
-    * portable and collision-free in practice, so the oracle replays it.
+    * Grams are keyed by their full 128-bit md5 digest (the 16 bytes the
+    * oracle's md5 hex string spells): cross-engine portable and
+    * collision-free in practice, so the oracle replays it. Ids must be
+    * non-NULL and unique per row: each row is scored on its own (ADVICE
+    * r20, as in [[lineDedup]]: the join formulation's groupBy(id) merged
+    * duplicate ids as an implementation artifact, not a contract).
     *
     * Output: id, n_tokens, n_dup_tokens, n_dup_spans, dup_frac,
     * cleaned_text. Token-sequence semantics: cleaned_text is the kept
@@ -321,8 +329,9 @@ object TextAnalysis {
     * hot-window + interval-merge machinery — including Lee et al.'s
     * keep-first canonical-copy semantic (`keepFirst = true` is C4's
     * own "keep one copy"). Window keys join units with \u0001 so unit
-    * boundaries can't alias into inner whitespace. Scale shape
-    * inherited unchanged (one posexplode shuffle + bounded hot set).
+    * boundaries can't alias into inner whitespace (NULL units are
+    * skipped, as `concat_ws` skips them). Scale shape inherited
+    * unchanged (one digest-keyed aggregate shuffle + bounded hot set).
     *
     * Output: id, n_units, n_dup_units, n_dup_spans, dup_frac,
     * cleaned_text (kept units in order, joined by `sep`). */
@@ -340,75 +349,55 @@ object TextAnalysis {
   /** Shared core of [[substringDedup]]/[[spanDedup]]: `base` is
     * (id, t: array<string>) — the unit sequence; windows of k units key
     * the corpus-wide hot set (joined by `keySep`), kept units emit
-    * joined by `outSep`. */
+    * joined by `outSep`. The kernels' value contract is in
+    * [[graft.plans.DupSpans]]. */
   private def dedupUnitWindows(base: DataFrame, k: Int, minCount: Long,
                                broadcastHot: Boolean, keepFirst: Boolean,
                                keySep: String, outSep: String): DataFrame = {
     require(k >= 2, s"substring/span dedup needs k >= 2, got $k")
-    val kL = lit(k.toLong)
-    // 1-based gram start positions, mirroring SQL list slicing
-    val flat = base
-      .select(col("id"), posexplode(
-        when(size(col("t")) >= k,
-          transform(sequence(lit(1), size(col("t")) - (k - 1)),
-            i => md5(concat_ws(keySep, slice(col("t"), i, lit(k))))))
-        .otherwise(array().cast("array<string>"))).as(Seq("p0", "h")))
-      .select(col("id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
-    val hot = flat.groupBy("h").agg(count(lit(1)).as("c"),
-        min(struct(col("id"), col("pos"))).as("canon"))
+    val digests = graft.plans.WindowDigests(col("t"), k, keySep)
+    // 1-based window positions, mirroring SQL list slicing; the position
+    // and id ride along only where something reads them
+    val flat =
+      if (keepFirst || !broadcastHot)
+        base.select(col("id"), posexplode(digests).as(Seq("p0", "d")))
+          .select(col("id"), (col("p0") + 1).cast("long").as("pos"),
+            col("d.hi").as("hi"), col("d.lo").as("lo"))
+      else base.select(inline(digests))
+    val canon = min(struct(col("id"), col("pos"))).as("canon")
+    val hot = flat.groupBy("hi", "lo")
+      .agg(count(lit(1)).as("c"), (if (keepFirst) Seq(canon) else Nil): _*)
       .filter(col("c") >= minCount)
-      .select(col("h"), col("canon"))
-    // fold sorted hot positions into disjoint [s, e) spans: merge when
-    // the next window starts at or before the current exclusive end
-    // (overlap OR adjacency -> one maximal duplicated run)
-    val spans = flat.join(if (broadcastHot) broadcast(hot) else hot, Seq("h"))
-      .filter(if (keepFirst)
-        !(col("canon.id") === col("id") && col("canon.pos") === col("pos"))
-      else lit(true))
-      .groupBy("id").agg(array_sort(collect_list(col("pos"))).as("ps"))
-      .select(col("id"), aggregate(
-        col("ps"),
-        struct(array().cast("array<struct<s:bigint,e:bigint>>").as("iv"),
-          lit(-1L).as("cs"), lit(-1L).as("ce")),
-        (st, p) => {
-          val iv = st.getField("iv")
-          val cs = st.getField("cs"); val ce = st.getField("ce")
-          when(cs === -1L, struct(iv.as("iv"), p.as("cs"), (p + kL).as("ce")))
-            .when(p <= ce, struct(iv.as("iv"), cs.as("cs"), (p + kL).as("ce")))
-            .otherwise(struct(
-              concat(iv, array(struct(cs.as("s"), ce.as("e")))).as("iv"),
-              p.as("cs"), (p + kL).as("ce")))
-        },
-        st => when(st.getField("cs") === -1L, st.getField("iv"))
-          .otherwise(concat(st.getField("iv"),
-            array(struct(st.getField("cs").as("s"), st.getField("ce").as("e")))))
-      ).as("iv"))
-    val covered = aggregate(col("iv"), lit(0L),
-      (a, x) => a + (x.getField("e") - x.getField("s")))
-    // kept text = the gaps between spans plus the tail, in order;
-    // spans are sorted + disjoint so every slice length is >= 0
-    val cleanedFromIv = concat_ws(outSep, aggregate(
-      col("iv"),
-      struct(lit(1L).as("last"), array().cast("array<string>").as("acc")),
-      (st, x) => struct(
-        x.getField("e").as("last"),
-        concat(st.getField("acc"),
-          slice(col("t"), st.getField("last").cast("int"),
-            (x.getField("s") - st.getField("last")).cast("int"))).as("acc")),
-      st => concat(st.getField("acc"),
-        slice(col("t"), st.getField("last").cast("int"),
-          greatest(size(col("t")).cast("long") - st.getField("last") + 1L,
-            lit(0L)).cast("int")))))
-    base.join(spans, Seq("id"), "left")
-      .select(col("id"),
-        size(col("t")).cast("long").as("n_tokens"),
-        coalesce(covered, lit(0L)).as("n_dup_tokens"),
-        when(col("iv").isNull, lit(0L))
-          .otherwise(size(col("iv")).cast("long")).as("n_dup_spans"),
-        (coalesce(covered, lit(0L)).cast("double") /
-          greatest(size(col("t")), lit(1)).cast("double")).as("dup_frac"),
-        when(col("iv").isNull, concat_ws(outSep, col("t")))
-          .otherwise(cleanedFromIv).as("cleaned_text"))
+      .drop("c")
+    val scored =
+      if (broadcastHot) {
+        val rows = hot.collect()
+        val toId = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(base.schema("id").dataType)
+        val table = new graft.plans.HotDigests(
+          rows.map(_.getLong(0)), rows.map(_.getLong(1)),
+          if (keepFirst) rows.map(r => toId(r.getStruct(2).get(0))) else null,
+          if (keepFirst) rows.map(_.getStruct(2).getLong(1)) else null)
+        base.select(col("id"), col("t"),
+          graft.plans.DupSpanScore(col("t"), col("id"), table, k, keySep, outSep)
+            .as("sc"))
+      } else {
+        val hits = flat.join(hot, Seq("hi", "lo"))
+          .filter(if (keepFirst)
+            !(col("canon.id") === col("id") && col("canon.pos") === col("pos"))
+          else lit(true))
+          .groupBy("id").agg(collect_list(col("pos")).as("ps"))
+        base.join(hits, Seq("id"), "left")
+          .select(col("id"), col("t"),
+            graft.plans.DupSpanFold(col("t"), col("ps"), k, outSep).as("sc"))
+      }
+    scored.select(col("id"),
+      size(col("t")).cast("long").as("n_tokens"),
+      col("sc.n_dup").as("n_dup_tokens"),
+      col("sc.n_spans").as("n_dup_spans"),
+      (col("sc.n_dup").cast("double") /
+        greatest(size(col("t")), lit(1)).cast("double")).as("dup_frac"),
+      col("sc.cleaned_text").as("cleaned_text"))
   }
 
   /** Gopher-style rule battery (Rae et al. 2021 §A1.1), the extended

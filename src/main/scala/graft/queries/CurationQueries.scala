@@ -653,9 +653,10 @@ object CurationQueries {
     // by any corpus-duplicated 8-gram, merged into maximal spans, and
     // the text with every duplicated span removed. The oracle replays
     // the interval merge as gaps-and-islands windows; the Spark side
-    // has NO Window — one groupBy(id) + an aggregate-HOF fold. Gram
-    // keys are md5 hex digests, which both engines compute (q23/q71
-    // precedent)
+    // has NO Window — each document is scored map-only against the
+    // collected hot set (graft.plans.DupSpans). Gram keys are the md5
+    // digest: hex strings in the oracle, the same 16 bytes as two longs
+    // on the Spark side (q23/q71 precedent)
     Q("q82_substring_dedup", Some(s"""
       WITH base AS (
         SELECT doc_id, ${toksSql("text")} AS t FROM documents),

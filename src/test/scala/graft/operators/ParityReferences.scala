@@ -6,11 +6,12 @@ import graft.util.Materialize.MatOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The pre-round-20 column formulations of three curation scorers,
-  * kept only as the bit-identity references their specs pin the
-  * map-only kernels against: [[ImportanceSampling.dsirWeights]],
-  * [[QualityClassifier.scoreWithMargin]] and
-  * [[TextAnalysis.unigramQuality]]. */
+/** The column formulations of four curation operators, kept only as the
+  * bit-identity references their specs pin the native kernels against:
+  * [[ImportanceSampling.dsirWeights]],
+  * [[QualityClassifier.scoreWithMargin]],
+  * [[TextAnalysis.unigramQuality]] and the duplicated-span core of
+  * [[TextAnalysis.substringDedup]] / [[TextAnalysis.spanDedup]]. */
 object ParityReferences {
 
   /** DSIR's feature stream: word unigrams + bigrams with multiplicity. */
@@ -113,5 +114,83 @@ object ParityReferences {
         // have no tokens to average, so their score is a neutral 0.0
         coalesce(avg(when(col("tok").isNotNull, col("logp"))), lit(0.0))
           .as("avg_logp"))
+  }
+
+  /** The higher-order-function formulation of the duplicated-span core
+    * shared by [[TextAnalysis.substringDedup]] and
+    * [[TextAnalysis.spanDedup]]: `base` is (id, t: array<string>); every
+    * k-unit window is keyed by the md5 hex of its units joined by
+    * `keySep` (concat_ws, so NULL units are skipped), windows whose key
+    * occurs at least `minCount` times are hot, and each document's hot
+    * positions fold into disjoint [s, e) spans (merge on overlap or
+    * adjacency). Output: id, n_tokens, n_dup_tokens, n_dup_spans,
+    * dup_frac, cleaned_text (kept units joined by `outSep`). */
+  def dedupUnitWindowsColumns(base: DataFrame, k: Int, minCount: Long,
+                              broadcastHot: Boolean, keepFirst: Boolean,
+                              keySep: String, outSep: String): DataFrame = {
+    val kL = lit(k.toLong)
+    // 1-based gram start positions, mirroring SQL list slicing
+    val flat = base
+      .select(col("id"), posexplode(
+        when(size(col("t")) >= k,
+          transform(sequence(lit(1), size(col("t")) - (k - 1)),
+            i => md5(concat_ws(keySep, slice(col("t"), i, lit(k))))))
+        .otherwise(array().cast("array<string>"))).as(Seq("p0", "h")))
+      .select(col("id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
+    val hot = flat.groupBy("h").agg(count(lit(1)).as("c"),
+        min(struct(col("id"), col("pos"))).as("canon"))
+      .filter(col("c") >= minCount)
+      .select(col("h"), col("canon"))
+    // fold sorted hot positions into disjoint [s, e) spans: merge when
+    // the next window starts at or before the current exclusive end
+    // (overlap OR adjacency -> one maximal duplicated run)
+    val spans = flat.join(if (broadcastHot) broadcast(hot) else hot, Seq("h"))
+      .filter(if (keepFirst)
+        !(col("canon.id") === col("id") && col("canon.pos") === col("pos"))
+      else lit(true))
+      .groupBy("id").agg(array_sort(collect_list(col("pos"))).as("ps"))
+      .select(col("id"), aggregate(
+        col("ps"),
+        struct(array().cast("array<struct<s:bigint,e:bigint>>").as("iv"),
+          lit(-1L).as("cs"), lit(-1L).as("ce")),
+        (st, p) => {
+          val iv = st.getField("iv")
+          val cs = st.getField("cs"); val ce = st.getField("ce")
+          when(cs === -1L, struct(iv.as("iv"), p.as("cs"), (p + kL).as("ce")))
+            .when(p <= ce, struct(iv.as("iv"), cs.as("cs"), (p + kL).as("ce")))
+            .otherwise(struct(
+              concat(iv, array(struct(cs.as("s"), ce.as("e")))).as("iv"),
+              p.as("cs"), (p + kL).as("ce")))
+        },
+        st => when(st.getField("cs") === -1L, st.getField("iv"))
+          .otherwise(concat(st.getField("iv"),
+            array(struct(st.getField("cs").as("s"), st.getField("ce").as("e")))))
+      ).as("iv"))
+    val covered = aggregate(col("iv"), lit(0L),
+      (a, x) => a + (x.getField("e") - x.getField("s")))
+    // kept text = the gaps between spans plus the tail, in order;
+    // spans are sorted + disjoint so every slice length is >= 0
+    val cleanedFromIv = concat_ws(outSep, aggregate(
+      col("iv"),
+      struct(lit(1L).as("last"), array().cast("array<string>").as("acc")),
+      (st, x) => struct(
+        x.getField("e").as("last"),
+        concat(st.getField("acc"),
+          slice(col("t"), st.getField("last").cast("int"),
+            (x.getField("s") - st.getField("last")).cast("int"))).as("acc")),
+      st => concat(st.getField("acc"),
+        slice(col("t"), st.getField("last").cast("int"),
+          greatest(size(col("t")).cast("long") - st.getField("last") + 1L,
+            lit(0L)).cast("int")))))
+    base.join(spans, Seq("id"), "left")
+      .select(col("id"),
+        size(col("t")).cast("long").as("n_tokens"),
+        coalesce(covered, lit(0L)).as("n_dup_tokens"),
+        when(col("iv").isNull, lit(0L))
+          .otherwise(size(col("iv")).cast("long")).as("n_dup_spans"),
+        (coalesce(covered, lit(0L)).cast("double") /
+          greatest(size(col("t")), lit(1)).cast("double")).as("dup_frac"),
+        when(col("iv").isNull, concat_ws(outSep, col("t")))
+          .otherwise(cleanedFromIv).as("cleaned_text"))
   }
 }

@@ -214,17 +214,43 @@ class PlanShapeSpec extends SparkSpec {
       "scoring must be one map-only pass:\n" + p)
   }
 
-  test("substringDedup: hot grams broadcast back; span merge is a fold, not a window") {
+  test("substringDedup: digest-keyed hot set, map-only scoring") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = graft.operators.TextAnalysis.substringDedup(
-      docs, "doc_id", "text", k = 8)
-    out.collect()
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = ran.add(qe)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ran.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    // building the DataFrame collects the hot set; collecting it scores
+    val out = try {
+      val df = graft.operators.TextAnalysis.substringDedup(docs, "doc_id", "text", k = 8)
+      df.collect()
+      df
+    } finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    // AQE prints the final plan, then the initial one: keep the final
+    val plans = ran.asScala.toSeq.map(_.executedPlan.toString.split("== Initial Plan ==")(0))
+    assert(plans.size === 2, plans.mkString("\n\n"))
+    val all = plans.mkString("\n\n")
+    assert(!all.contains("md5("),
+      "grams must be keyed by the two-long digest, not an md5 hex string:\n" + all)
+    assert(!all.contains("ObjectHashAggregate") && !all.contains("collect_list"),
+      "the default path must not gather hits per document:\n" + all)
+    assert(!all.contains("Window") && !all.contains("CartesianProduct") &&
+      !all.contains("BroadcastNestedLoopJoin"),
+      "no window or cross product anywhere:\n" + all)
+    val exchanges = "(?m)[-\\s]Exchange ".r.findAllIn(all).size
+    assert(exchanges === 1, s"exactly one exchange, the hot aggregate's:\n$all")
     val p = out.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"),
-      "default path must broadcast the hot-gram set:\n" + p)
-    assert(!p.contains("Window") && !p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"),
-      "interval merge must be the aggregate-HOF fold, not a window/cross product:\n" + p)
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      "documents must be scored map-only against the collected hot set:\n" + p)
   }
 
   test("minhash keeps the banded equi-join shape; DSIR scores map-only") {
