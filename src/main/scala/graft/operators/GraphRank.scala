@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.util.Materialize.MatOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Graph centrality over corpus-derived graphs (Page et al. 1999 —
   * "The PageRank Citation Ranking"): the curation signal web-corpus
@@ -1505,38 +1508,101 @@ object GraphRank {
     * the identical schedule, converged or not (kNN graphs converge in
     * O(5) rounds: each peel strictly shrinks the node set or stops).
     *
-    * Scale shape: per round one ids-only degree count over surviving
-    * edges + two semi-joins — never features, no windows. Output:
-    * (id, in_core int 0/1). */
+    * Degrees count the ordered mutual pairs (a, b) with the
+    * multiplicity of the directed edge a→b, self-loops included. Edge
+    * endpoints absent from `nodes` count toward round-1 degrees and are
+    * peeled with round 1; NULL ids are never in the core. Endpoints are
+    * compared as `nodes`' id type.
+    *
+    * Scale shape: a co-partitioned iteration. One shuffle sends every
+    * directed edge to both endpoints' hash partitions and the node ids
+    * to theirs, on the same partitioner; each partition pairs its arcs
+    * into the mutual pairs (a, b) keyed by its own `a` and is persisted.
+    * Each round is then ONE map-only job: every task drops the pairs
+    * with an endpoint in the cumulative dead set (broadcast from the
+    * driver), counts degree per local `a` and returns the ids it peels.
+    * A round that peels nothing is the fixed point, so the loop stops
+    * there (the early termination of Chen et al., "Online Search of
+    * Top-K Influential Communities", VLDB 2018); the last round runs
+    * map-only inside the returned frame's own action. No Exchange runs
+    * after the first round's shuffle, and only peeled ids reach the
+    * driver. Output: (id, in_core int 0/1), one row per distinct id, in
+    * hash-partition order. */
   def kCore(nodes: DataFrame, idCol: String,
             edges: DataFrame, srcCol: String, dstCol: String,
             coreK: Int, rounds: Int): DataFrame = {
     require(coreK >= 1 && rounds >= 1)
-    val ids = nodes.select(col(idCol).as("id")).distinct()
-      .materializeOnce(eager = false)
-    val d1 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-    val d2 = edges.select(col(dstCol).as("a"), col(srcCol).as("b"))
-    // ordered mutual pairs, BOTH orientations (degree = row count per a)
-    val und0 = d1.join(d2, Seq("a", "b"), "left_semi")
-      .materializeOnce(eager = false)
-    var live = ids
-    var und = und0
-    var r = 0
-    while (r < rounds) {
-      val deg = und.groupBy(col("a").as("id"))
-        .agg(count(lit(1)).as("__deg"))
-      live = live.join(deg.filter(col("__deg") >= coreK),
-          Seq("id"), "left_semi")
-        .materializeOnce(eager = false)
-      und = und
-        .join(live.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(live.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .materializeOnce(eager = false)
-      r += 1
+    val spark = nodes.sparkSession
+    val idField = nodes.select(col(idCol).as("id")).schema.head
+    val byA = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // edge s->d: a forward arc (s, d) under s, a reverse mark (d, s) under d
+    val arcs = edges.select(col(srcCol).cast(idField.dataType),
+        col(dstCol).cast(idField.dataType)).rdd
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else Iterator((r.get(0), (r.get(1), true)), (r.get(1), (r.get(0), false)))
+      }.partitionBy(byA)
+    val ids = nodes.select(col(idCol)).rdd
+      .map(r => (r.get(0), ())).partitionBy(byA)
+    val state = arcs.zipPartitions(ids) { (as, is) =>
+        Iterator(CorePartition(as, is.map(_._1)))
+      }.setName("kCore state").persist(StorageLevel.MEMORY_AND_DISK)
+    val sc = spark.sparkContext
+    var dead = Set.empty[Any]
+    var round = 1
+    var peeling = true
+    while (round < rounds && peeling) {
+      val bc = sc.broadcast(dead)
+      val peeled = state.flatMap(_.peeled(bc.value, coreK)).collect()
+      bc.destroy()
+      peeling = peeled.nonEmpty
+      dead ++= peeled
+      round += 1
     }
-    ids.join(live.withColumn("__in", lit(1)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__in"), lit(0)).as("in_core"))
+    val last = sc.broadcast(dead)
+    spark.createDataFrame(state.flatMap(_.membership(last.value, coreK)),
+      StructType(Seq(idField, StructField("in_core", IntegerType, nullable = false))))
+  }
+
+  /** One hash partition of [[kCore]]'s state: the mutual pairs (a(i),
+    * b(i)) whose `a` hashes here, and the node ids that hash here. */
+  private final class CorePartition(a: Array[Any], b: Array[Any],
+                                    ids: Set[Any]) extends Serializable {
+    /** Degree per `a` over the pairs with neither endpoint in `dead`. */
+    private def degrees(dead: Set[Any]): scala.collection.mutable.HashMap[Any, Int] = {
+      val deg = scala.collection.mutable.HashMap.empty[Any, Int]
+      var i = 0
+      while (i < a.length) {
+        if (!dead(a(i)) && !dead(b(i))) deg(a(i)) = deg.getOrElse(a(i), 0) + 1
+        i += 1
+      }
+      deg
+    }
+
+    /** The ids this round peels: every surviving `a` below `coreK`, and
+      * every surviving `a` that is not a node. */
+    def peeled(dead: Set[Any], coreK: Int): Iterator[Any] =
+      degrees(dead).iterator
+        .collect { case (x, d) if d < coreK || !ids(x) => x }
+
+    /** (id, in_core) for every node id: 1 iff its degree is >= `coreK`. */
+    def membership(dead: Set[Any], coreK: Int): Iterator[Row] = {
+      val deg = degrees(dead)
+      ids.iterator.map(id => Row(id, if (deg.getOrElse(id, 0) >= coreK) 1 else 0))
+    }
+  }
+
+  private object CorePartition {
+    /** Pairs one partition's arcs: the ordered mutual pairs are the
+      * forward arcs (a, b), with their multiplicity, whose reverse mark
+      * (a, b) — the edge b->a — is present too. */
+    def apply(arcs: Iterator[(Any, (Any, Boolean))], ids: Iterator[Any]): CorePartition = {
+      val (fwd, rev) = arcs.toArray.partition(_._2._2)
+      val mutual = rev.iterator.map { case (a, (b, _)) => (a, b) }.toSet
+      val (a, b) = fwd.iterator.map { case (a, (b, _)) => (a, b) }
+        .filter(mutual).toArray.unzip
+      new CorePartition(a, b, ids.toSet)
+    }
   }
 
   /** The DuckDB replay of [[kCore]] over caller-provided `nodes(id)` /

@@ -2291,7 +2291,8 @@ object CorpusQueries {
     // periphery — the density CUT the q150 lcc only scores. Fixed-round
     // SIMULTANEOUS peeling (the sequential peel is order-dependent;
     // this form unrolls identically in both engines, converged or
-    // not); per round one ids-only degree count + two semi-joins
+    // not); per round one map-only degree count over the mutual pairs,
+    // partitioned once
     Q("q171_kcore", Some(s"""
       WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       knn AS (

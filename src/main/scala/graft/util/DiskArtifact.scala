@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Disk-backed build-once artifacts (trained LM tiers, fitted codebooks)
   * keyed by a CONTENT stamp of their input corpus, so a refreshed
@@ -38,11 +39,14 @@ object DiskArtifact {
       java.lang.Long.toHexString(s) + "-" + r.getLong(2)
   }
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** (kind|stamp) -> (path, parquet schema). A stamped directory never
+    * changes once its `_SUCCESS` exists, so its schema is read once per
+    * JVM and every later read skips parquet's schema-inference job. */
+  private val cache = scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
 
-  /** Test hook: forget the per-JVM memo, as a fresh JVM would — crash
-    * simulations delete on-disk state and must not have the memo paper
-    * over it. */
+  /** Test hook: forget the per-JVM memo (paths and schemas), as a fresh
+    * JVM would — crash simulations delete on-disk state and must not
+    * have the memo paper over it. */
   private[graft] def resetMemo(): Unit = cache.clear()
 
   /** True iff (`kind`, `stamp`) is already FULLY materialized on disk
@@ -56,16 +60,17 @@ object DiskArtifact {
   /** Read the artifact for (`kind`, `stamp`), building + writing it
     * first if this stamped path has never been materialized (checked by
     * parquet's `_SUCCESS` marker, so a torn write rebuilds too). The
-    * per-JVM memo only short-circuits the existence check. */
+    * per-JVM memo short-circuits the existence check and the schema
+    * inference. */
   def getOrBuild(spark: SparkSession, kind: String, stamp: String)
                 (build: () => DataFrame): DataFrame = {
-    val path = cache.getOrElseUpdate(s"$kind|$stamp", {
+    val (path, schema) = cache.getOrElseUpdate(s"$kind|$stamp", {
       val p = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-$kind-$stamp").getAbsolutePath
       if (!new java.io.File(p, "_SUCCESS").exists())
         build().write.mode("overwrite").parquet(p)
-      p
+      (p, spark.read.parquet(p).schema)
     })
-    spark.read.parquet(path)
+    spark.read.schema(schema).parquet(path)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.util.Materialize.MatOps
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Integer PageRank (Page et al. 1999) + the kNN similarity graph:
@@ -876,6 +877,66 @@ class GraphRankSpec extends SparkSpec {
         edges.toDF("src", "dst").repartition(3), "src", "dst", 3, 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(rep === c3)
+  }
+
+  test("kCore: a warm peel runs at most rounds + 3 jobs; after the first, each round is one map-only stage") {
+    import org.apache.spark.scheduler._
+    // a 7-node path hanging off a mutual 4-clique loses its free end
+    // every round: coreK 2 peels in each of rounds 1-7, nothing in 8
+    val clique = for {
+      a <- 1L to 4L; b <- 1L to 4L if a != b
+    } yield (a, b)
+    val path = (10L to 16L).sliding(2).flatMap { case Seq(a, b) =>
+      Seq((a, b), (b, a)) }.toSeq
+    val nodes = (1L to 16L).toDF("id")
+    val edges = (clique ++ path ++ Seq((4L, 10L), (10L, 4L))).toDF("src", "dst")
+    val sc = spark.sparkContext
+    /** Per job of one peel and its collect: the stages that ran, each
+      * with the shuffle bytes + records it read and wrote. */
+    def jobsOf(rounds: Int): (Seq[Seq[Long]], Seq[Row]) = {
+      val stagesOfJob = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+      val shuffleOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          stagesOfJob.put(e.jobId, e.stageIds)
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          val m = e.stageInfo.taskMetrics
+          shuffleOfStage.put(e.stageInfo.stageId,
+            m.shuffleReadMetrics.totalBytesRead + m.shuffleReadMetrics.recordsRead +
+              m.shuffleWriteMetrics.bytesWritten + m.shuffleWriteMetrics.recordsWritten)
+        }
+      }
+      sc.addSparkListener(listener)
+      val rows = try GraphRank.kCore(nodes, "id", edges, "src", "dst",
+          coreK = 2, rounds = rounds).collect().toSeq.sortBy(_.getLong(0))
+        finally {
+          org.apache.spark.ListenerBusDrain(sc)
+          sc.removeSparkListener(listener)
+        }
+      import scala.jdk.CollectionConverters._
+      val jobs = stagesOfJob.asScala.toSeq.sortBy(_._1).map { case (_, stages) =>
+        stages.filter(shuffleOfStage.containsKey).map(shuffleOfStage.get(_).longValue) }
+      (jobs, rows)
+    }
+    jobsOf(5) // warm-up
+    val (five, fiveRows) = jobsOf(5)
+    // rounds 1-4 collect their peel, round 5 is the collect itself
+    assert(five.size === 5 && five.size <= 5 + 3, s"${five.size} jobs for 5 rounds")
+    assert(five.head.size === 3,
+      s"round 1 shuffles the arcs and the ids, then peels: ${five.head}")
+    five.tail.zipWithIndex.foreach { case (stages, i) =>
+      assert(stages === Seq(0L), s"round ${i + 2} ran stages with shuffle $stages") }
+    // after 5 rounds the path keeps its 2 nodes nearest the clique
+    assert(fiveRows.map(r => r.getLong(0) -> r.getInt(1)) ===
+      (1L to 4L).map(_ -> 1) ++ (5L to 9L).map(_ -> 0) ++
+        (10L to 11L).map(_ -> 1) ++ (12L to 16L).map(_ -> 0))
+    // early termination: rounds 1-7 peel, round 8 peels nothing and
+    // ends the loop, so a budget of 20 runs 8 collected rounds + the
+    // collect
+    val (twenty, twentyRows) = jobsOf(20)
+    assert(twenty.size === 9, s"${twenty.size} jobs for a peel converging in round 8")
+    assert(twenty.tail.forall(_ == Seq(0L)))
+    assert(twentyRows.filter(_.getInt(1) == 1).map(_.getLong(0)) === (1L to 4L))
   }
 
   test("hits: star authority concentrates, hubs tie, integer replay") {

@@ -6,12 +6,13 @@ import graft.util.Materialize.MatOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The column formulations of four curation operators, kept only as the
+/** The column formulations of five curation operators, kept only as the
   * bit-identity references their specs pin the native kernels against:
   * [[ImportanceSampling.dsirWeights]],
   * [[QualityClassifier.scoreWithMargin]],
-  * [[TextAnalysis.unigramQuality]] and the duplicated-span core of
-  * [[TextAnalysis.substringDedup]] / [[TextAnalysis.spanDedup]]. */
+  * [[TextAnalysis.unigramQuality]], the duplicated-span core of
+  * [[TextAnalysis.substringDedup]] / [[TextAnalysis.spanDedup]] and
+  * [[GraphRank.kCore]]. */
 object ParityReferences {
 
   /** DSIR's feature stream: word unigrams + bigrams with multiplicity. */
@@ -192,5 +193,39 @@ object ParityReferences {
           greatest(size(col("t")), lit(1)).cast("double")).as("dup_frac"),
         when(col("iv").isNull, concat_ws(outSep, col("t")))
           .otherwise(cleanedFromIv).as("cleaned_text"))
+  }
+
+  /** The join formulation of [[GraphRank.kCore]]: every round a degree
+    * count over the surviving mutual pairs, a semi-join of the live ids
+    * and two semi-joins of the pairs, each materialized. */
+  def kCoreColumns(nodes: DataFrame, idCol: String,
+                   edges: DataFrame, srcCol: String, dstCol: String,
+                   coreK: Int, rounds: Int): DataFrame = {
+    require(coreK >= 1 && rounds >= 1)
+    val ids = nodes.select(col(idCol).as("id")).distinct()
+      .materializeOnce(eager = false)
+    val d1 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val d2 = edges.select(col(dstCol).as("a"), col(srcCol).as("b"))
+    // ordered mutual pairs, BOTH orientations (degree = row count per a)
+    val und0 = d1.join(d2, Seq("a", "b"), "left_semi")
+      .materializeOnce(eager = false)
+    var live = ids
+    var und = und0
+    var r = 0
+    while (r < rounds) {
+      val deg = und.groupBy(col("a").as("id"))
+        .agg(count(lit(1)).as("__deg"))
+      live = live.join(deg.filter(col("__deg") >= coreK),
+          Seq("id"), "left_semi")
+        .materializeOnce(eager = false)
+      und = und
+        .join(live.select(col("id").as("a")), Seq("a"), "left_semi")
+        .join(live.select(col("id").as("b")), Seq("b"), "left_semi")
+        .select("a", "b")
+        .materializeOnce(eager = false)
+      r += 1
+    }
+    ids.join(live.withColumn("__in", lit(1)), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__in"), lit(0)).as("in_core"))
   }
 }

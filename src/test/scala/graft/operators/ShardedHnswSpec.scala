@@ -453,6 +453,37 @@ class ShardedHnswSpec extends SparkSpec {
       === want)
   }
 
+  test("build and compactPersisted from a thread whose active session was cleared") {
+    // a pool thread with no active SparkSession: the scorecard's
+    // futures may run on one, and a plan node built there would carry
+    // a null SparkPlan.session
+    val (shardsPath, metaPath) = tempTier("shnsw-nosession")
+    val want = ShardedHnsw.build(emb, "vec_id", "embedding", nCells = 4)
+    ShardedHnsw.save(want, shardsPath, metaPath)
+    val dead = ShardedHnsw.memberCells(ShardedHnsw.load(spark, shardsPath, metaPath))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).filter(_._2 == 1)
+      .map(_._1).take(2).toSet
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val built = new java.util.concurrent.atomic.AtomicReference[ShardedHnsw.Shards]()
+    val worker = new Thread(() =>
+      try {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        assert(org.apache.spark.sql.SparkSession.getActiveSession.isEmpty)
+        built.set(ShardedHnsw.build(emb, "vec_id", "embedding", nCells = 4))
+        ShardedHnsw.compactPersisted(spark, shardsPath, metaPath, dead, Seq(1))
+      } catch { case t: Throwable => failure.set(t) })
+    worker.start()
+    worker.join()
+    Option(failure.get).foreach(t => throw t)
+    assert(ShardedHnsw.metaFrame(built.get).collect().toSeq ===
+      ShardedHnsw.metaFrame(want).collect().toSeq)
+    val served = ShardedHnsw.searchBatch(ShardedHnsw.load(spark, shardsPath, metaPath),
+        emb.select(col("vec_id").as("qid"), col("embedding").as("qv")),
+        "qid", "qv", k = 3, nProbe = 4)
+      .collect().map(_.getLong(2))
+    assert(served.nonEmpty && !served.exists(dead))
+  }
+
   test("re-shard watermark: a hot cell past growFactor x maxCellSize splits locally — fan grows, bound holds, recall kept, only that leaf rewrites") {
     val (shardsPath, metaPath) = tempTier("shnsw-grow")
     // cap 64: the ~500-member corpus over 4 cells builds multi-sub

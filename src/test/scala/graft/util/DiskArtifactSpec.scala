@@ -54,4 +54,34 @@ class DiskArtifactSpec extends SparkSpec {
     assert(DiskArtifact.getOrBuild(spark, kind, s1)(build(v1)).count() === 2)
     assert(builds === 2)
   }
+
+  test("a warm read starts no Spark job; resetMemo forgets the schema too") {
+    import spark.implicits._
+    val kind = s"spec-schema-${System.nanoTime()}"
+    val v = Seq((1L, "one"), (2L, "two")).toDF("id", "t")
+    val stamp = DiskArtifact.corpusStamp(v, "id", "t")
+    DiskArtifact.getOrBuild(spark, kind, stamp)(() => v)
+    val sc = spark.sparkContext
+    def jobsOfRead(): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try DiskArtifact.getOrBuild(spark, kind, stamp)(() => fail("rebuilt"))
+        .queryExecution.executedPlan
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+    assert(jobsOfRead() === 0)
+    DiskArtifact.resetMemo()
+    assert(jobsOfRead() === 1, "a cold read infers the schema once")
+    assert(jobsOfRead() === 0)
+    assert(DiskArtifact.getOrBuild(spark, kind, stamp)(() => fail("rebuilt"))
+      .as[(Long, String)].collect().sorted.toSeq === Seq((1L, "one"), (2L, "two")))
+  }
 }
